@@ -60,8 +60,7 @@ SCALING_PARAMS = dict(n_domains=4, cats=8, lists_per_cat=64,
                       details_per_list=640, hot_details_per_list=2700,
                       seed_all_lists=True, save_pages=False)
 SCALING_SETTINGS = {"schedule_quantity_limitation": 2_000_000, "buckets": 32,
-                    "bloom_keys_per_bucket": 50_000,
-                    "concurrent_commits": True}
+                    "bloom_keys_per_bucket": 50_000}
 SCALING_ROUNDS = 2
 BENCH_ROUNDS = 4
 BENCH_SETTINGS = {
@@ -364,11 +363,6 @@ def main():
         # NCS_SCALING_BUCKETED=0 re-runs the plain-parquet shape
         bucketed = os.environ.get("NCS_SCALING_BUCKETED", "1") == "1"
         settings = dict(SCALING_SETTINGS)
-        # A/B knob for the commit-mode diagnosis (r5): concurrent py4j write
-        # jobs were the r2 local[32] regression; NCS_SCALING_CONC_COMMITS=0
-        # re-runs the scaling job with sequential commits
-        if os.environ.get("NCS_SCALING_CONC_COMMITS") == "0":
-            settings["concurrent_commits"] = False
         steal0 = read_cpu_steal()
         try:
             crawl = run_crawl(spark, rounds=SCALING_ROUNDS, site_params=SCALING_PARAMS,

@@ -14,6 +14,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .scheduler import quota_cts, scheduler_admit
+
 ROUND_TS_MS = 1767312000000  # fixed round clock (determinism; never now())
 
 
@@ -120,10 +122,12 @@ WHERE pop_rank <= 2
 
 # --------------------------------------------------------------------------
 # 5. weighted-fair quota with sequential leftover carry
-# (scheduler/index.js:210, 250-254). The inherently-sequential carry
-# left_i = max(0, left_{i-1} + ceil_i - avail_i) is realized as a window via
-# the drawdown identity  x_i = prefix_i - min_{0<=j<=i} prefix_j  — fully
-# distributed, no driver loop, deterministic.
+# (scheduler/index.js:210, 250-254), run by the crawl round's own kernel
+# scheduler.quota_cts: the inherently-sequential carry
+# left_i = max(0, left_{i-1} + ceil_i - avail_i) is a window via the drawdown
+# identity  x_i = prefix_i - min_{0<=j<=i} prefix_j  — fully distributed, no
+# driver loop, deterministic. Order priorities stand in for rules, ranked by
+# rate desc (ties by priority name).
 _PRIORITY_RATE = """CASE substr(o_orderpriority, 1, 1)
     WHEN '1' THEN 110.0 WHEN '2' THEN 55.0 WHEN '3' THEN 36.0
     WHEN '4' THEN 27.0 ELSE 22.0 END"""
@@ -138,34 +142,14 @@ def q_weighted_fair_quota(spark, sf_dir):
         .withColumn("rate", F.expr(_PRIORITY_RATE))
     )
     total = g.agg(F.sum("rate")).collect()[0][0]  # tiny (5 rows): scalar on driver
-    avg_rate = _QUOTA_BALANCE / total
-    w_ord = Window.orderBy(F.desc("rate"), "o_orderpriority")
-    g = (
-        g.withColumn("ceil_ct", F.ceil(F.lit(avg_rate) * F.col("rate")))
-        .withColumn("d", F.col("ceil_ct") - F.col("avail"))
-        .withColumn("prefix", F.sum("d").over(w_ord.rowsBetween(Window.unboundedPreceding, 0)))
-        .withColumn(
-            "carry_in",
-            F.coalesce(
-                F.lag("prefix").over(w_ord)
-                - F.least(
-                    F.lit(0),
-                    F.min(F.least(F.lit(0), F.col("prefix"))).over(
-                        w_ord.rowsBetween(Window.unboundedPreceding, -1)
-                    ),
-                ),
-                F.lit(0),
-            ),
-        )
-    )
-    # carry_in_i = left_{i-1} = prefix_{i-1} - min(0, min prefix_{j<=i-1})
-    return g.select(
-        "o_orderpriority",
-        "avail",
-        (F.col("ceil_ct") + F.col("carry_in")).cast("long").alias("ct"),
-        F.least(F.col("avail"), F.col("ceil_ct") + F.col("carry_in"))
-        .cast("long")
-        .alias("scheduled"),
+    key = F.col("o_orderpriority").alias("rule_key")
+    rules = g.select(key, "rate", F.row_number().over(
+        Window.orderBy(F.desc("rate"), "o_orderpriority")).alias("rule_rank"))
+    cts = quota_cts(g.select(key, F.col("avail").alias("available")), rules,
+                    _QUOTA_BALANCE / total)
+    return g.join(cts.withColumnRenamed("rule_key", "o_orderpriority"), "o_orderpriority").select(
+        "o_orderpriority", "avail", "ct",
+        F.least("avail", "ct").cast("long").alias("scheduled"),
     )
 
 
@@ -199,31 +183,23 @@ FROM p
 
 
 # --------------------------------------------------------------------------
-# 6. recrawl-window predicate (scheduler/index.js:373-394) — the CASE WHEN
-# admission expression evaluated over an event log standing in for url_state.
+# 6. recrawl-window predicate (scheduler/index.js:373-394) — the round's own
+# scheduler.scheduler_admit CASE WHEN expression evaluated over an event log
+# standing in for url_state (ts is never null, so its coalesce(last, 0) is
+# inert here).
 _STATUS_MAP = """CASE event_type WHEN 'click' THEN 'crawling' WHEN 'view' THEN 'schedule'
  WHEN 'purchase' THEN 'crawled_finish' WHEN 'error' THEN 'crawled_failure' ELSE 'hit' END"""
 
 
 def q_recrawl_window_filter(spark, sf_dir):
-    ev = load(spark, sf_dir, "events")
     ev = (
-        ev.withColumn("status", F.expr(_STATUS_MAP))
+        load(spark, sf_dir, "events")
+        .withColumn("status", F.expr(_STATUS_MAP))
         .withColumn("last", F.unix_millis(F.col("ts").cast("timestamp")))  # NTZ→LTZ; session TZ pinned UTC
-        .withColumn("interval_ms", (F.col("user_id") % 3 + 1) * 3600 * 1000)
-        .withColumn(
-            "real_interval",
-            F.when(F.col("status").isin("crawling", "schedule"), F.lit(3600 * 1000)).otherwise(
-                F.col("interval_ms")
-            ),
-        )
-        .withColumn(
-            "admit",
-            F.col("status").isin("crawled_failure", "hit")
-            | ((F.lit(ROUND_TS_MS) - F.col("last")) >= F.col("real_interval")),
-        )
+        .withColumn("interval_s", (F.col("user_id") % 3 + 1) * 3600)
     )
-    return ev.where("admit").groupBy("status").agg(F.count("*").alias("admitted"))
+    admit = scheduler_admit(ROUND_TS_MS, F.col("interval_s"))
+    return ev.where(admit).groupBy("status").agg(F.count("*").alias("admitted"))
 
 
 SQL_RECRAWL_WINDOW = f"""

@@ -203,7 +203,7 @@ def q_recrawl_window_discovery(spark, sf_dir):
         .withColumn("last", F.unix_millis(F.col("ts").cast("timestamp")))
         .withColumn("interval_s", (F.col("user_id") % 3 + 1) * 3600)
     )
-    admit = discovery_admit(ROUND_TS_MS, F.col("interval_s"), F.lit(None))
+    admit = discovery_admit(ROUND_TS_MS, F.col("interval_s"))
     return ev.where(admit).groupBy("status").agg(F.count("*").alias("admitted"))
 
 

@@ -8,13 +8,18 @@ hash primitive: md5 hex → first 15 hex chars → bigint (identical in Spark
 
 Scale notes:
 * exact dedup — one hash-agg shuffle on md5(text): partial agg map-side.
-* MinHash — explode(tokens)×perms is the classic shuffle-heavy shape; the
-  groupBy(doc, perm).min is map-side combinable so the shuffle carries only
-  |docs|×|perms| rows, not |tokens|×|perms|.
-* LSH banding — candidate pairs come from a self-join on (band, band_hash)
-  buckets: equi join, broadcastable band table, no O(n²) pair scan.
-* SimHash — bit-matrix aggregate; sum over tokens per bit is map-side
-  combinable, output one row per doc.
+* MinHash — signatures are ROW-LOCAL: each document's distinct tokens are
+  hashed into one array, and each of the 8 permutations' minhash is an
+  array_min over it (_doc_sig_frame). The whole signature pipeline is one
+  map over the documents scan: no explode, no perms cross join, no shuffle.
+* LSH banding — 4 bands of 2 minhashes; candidate pairs come from an equi
+  self-join on (band, band_hash), never an O(n²) pair scan. In the pair
+  and resolve queries, documents with identical signatures are first
+  contracted into one group row (_sig_groups), so the band join and the
+  connected components run over distinct signatures and expand back to
+  documents through linear member joins.
+* SimHash — each of the 48 bits' vote sum is an aggregate() over the same
+  per-document token-hash array; row-local too, one output row per doc.
 """
 
 from __future__ import annotations

@@ -37,18 +37,22 @@ def scheduler_admit(round_ts_ms: int, interval_s: Column) -> Column:
     return F.col("status").isin("crawled_failure", "hit") | window_ok
 
 
-def discovery_admit(round_ts_ms: int, interval_s: Column, link_version: Column) -> Column:
+def discovery_admit(round_ts_ms: int, interval_s: Column,
+                    status: str = "status", last: str = "last") -> Column:
     """Discovery-flavor window (/root/reference/spider/pipeline.js:127-172):
     same shape, different constants — crawling/schedule → 10 min, hit → 2
     days, crawled_failure bypasses (failed URLs are re-enqueued on
-    rediscovery). Branch-new-version fast-path dead as above."""
+    rediscovery). Branch-new-version fast-path dead as above. `status` and
+    `last` name the state columns to read (the round reads its effective
+    e_status/e_last overlay)."""
+    st = F.col(status)
     real_interval = (
-        F.when(F.col("status").isin("crawling", "schedule"), F.lit(TEN_MIN_MS))
-        .when(F.col("status") == "hit", F.lit(TWO_DAYS_MS))
+        F.when(st.isin("crawling", "schedule"), F.lit(TEN_MIN_MS))
+        .when(st == "hit", F.lit(TWO_DAYS_MS))
         .otherwise(interval_s.cast("long") * 1000)
     )
-    window_ok = (F.lit(round_ts_ms) - F.coalesce(F.col("last"), F.lit(0))) >= real_interval
-    return (F.col("status") == "crawled_failure") | window_ok
+    window_ok = (F.lit(round_ts_ms) - F.coalesce(F.col(last), F.lit(0))) >= real_interval
+    return (st == "crawled_failure") | window_ok
 
 
 def quota_cts(avail_df: DataFrame, rules_df: DataFrame, avg_rate: float) -> DataFrame:
@@ -93,24 +97,30 @@ def quota_cts(avail_df: DataFrame, rules_df: DataFrame, avg_rate: float) -> Data
 QUOTA_BKT_SPAN = 1 << 16  # seq-range rows per prefix-sum bucket (dense regions)
 
 
-def consume_quota(
-    admits: DataFrame,
-    ct_by_rule: "dict[str, int] | DataFrame",
-    lifo_rules: set[str],
-) -> DataFrame:
+def pop_order(lifo_rules: set[str]) -> Column:
+    """Pop order within a rule: seq ascending (FIFO, lpop) or descending for
+    LIFO rules (rpop)."""
+    return F.when(
+        F.col("rule_key").isin(*lifo_rules) if lifo_rules else F.lit(False),
+        -F.col("seq"),
+    ).otherwise(F.col("seq"))
+
+
+def consume_quota(admits: DataFrame, ct_by_rule: DataFrame, lifo_rules: set[str]
+                  ) -> DataFrame:
     """Realize the sequential pop loop (scheduler/index.js:216-256): a
     frontier row is POPPED (consumed) iff the number of admitted rows
     strictly before it in pop order is < ct; it is SCHEDULED iff popped ∧
     admitted. Rejected pops are consumed without counting — exactly the
     reference's lpop-then-drop behavior.
 
-    admits: frontier ⋈ url_state with an `admit` boolean and `seq`.
+    admits: frontier ⋈ url_state with an `admit` boolean and `seq`;
+    ct_by_rule: (rule_key, ct), a rule missing from it pops nothing.
     Returns admits + `popped`, `sched` booleans + `sched_rank`.
 
     Scale/skew design — the running count is a TWO-LEVEL distributed prefix
-    sum, not one window per rule (r3: a per-rule window sorts the hot rule's
-    whole frontier in ONE task — with ~16 rules and a 60%-hot domain that
-    single sort was core-count-independent round floor):
+    sum, not one window per rule (a per-rule window sorts the hot rule's
+    whole frontier in ONE task, a core-count-independent round floor):
       1. rows bucket by seq RANGE (floor(order/2^16); order-preserving, so
          buckets concatenate in pop order; seq is dense within a round's
          rank region, so hot-rule buckets hold ≤ 2^16 rows each);
@@ -125,11 +135,7 @@ def consume_quota(
     partition pruning additionally bounds the scan to the lowest ranges
     until ct is covered (the analog of popping the head of a Redis list).
     """
-    order_col = F.when(
-        F.col("rule_key").isin(*lifo_rules) if lifo_rules else F.lit(False),
-        -F.col("seq"),
-    ).otherwise(F.col("seq"))
-    admits = admits.withColumn("_ord", order_col).withColumn(
+    admits = admits.withColumn("_ord", pop_order(lifo_rules)).withColumn(
         "_bkt", F.floor(F.col("_ord") / F.lit(QUOTA_BKT_SPAN))
     )
     w_loc = (
@@ -150,16 +156,9 @@ def consume_quota(
     ).select("rule_key", "_bkt", "_off")
     admits = admits.join(offsets, ["rule_key", "_bkt"], "left")
     admits_before = F.col("_off") + local_before
-    if isinstance(ct_by_rule, DataFrame):
-        admits = admits.join(
-            F.broadcast(ct_by_rule.withColumnRenamed("ct", "_ct")), "rule_key", "left"
-        ).withColumn("_ct", F.coalesce("_ct", F.lit(0)))
-    else:
-        ct_expr = F.coalesce(
-            *[F.when(F.col("rule_key") == k, F.lit(v)) for k, v in ct_by_rule.items()],
-            F.lit(0),
-        ) if ct_by_rule else F.lit(0)
-        admits = admits.withColumn("_ct", ct_expr)
+    admits = admits.join(
+        F.broadcast(ct_by_rule.withColumnRenamed("ct", "_ct")), "rule_key", "left"
+    ).withColumn("_ct", F.coalesce("_ct", F.lit(0)))
     return (
         admits.withColumn("_ab", admits_before)
         .withColumn("popped", F.col("_ab") < F.col("_ct"))

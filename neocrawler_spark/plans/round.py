@@ -1,13 +1,18 @@
-"""One crawl round as ONE DataFrame job (SURVEY.md §3.1-3.2 restructured).
+"""One crawl round as six phase functions over staged DataFrames (SURVEY.md
+§3.1-3.2 restructured).
 
 The reference's scheduling round + spider loop cross a network boundary on
 every Redis op (per-URL hgetall×2 + hmset + rpush); here the whole round is
-columnar:
+columnar, in six phases:
 
-  frontier ⋈ url_state → admission predicate → quota window (deterministic
-  carry) → politeness top-k per host → fetch = batch ⋈ pages → validation →
-  extraction pUDF → (links: explode → bloom probe → discovery predicate →
-  frontier append) ∥ (content → crawled) ∥ (state merge) ∥ (metrics agg)
+  admit:         frontier ⋈ url_state → admission predicate → quota window
+                 (deterministic carry) → fr2
+  gate:          scheduled queue → robots + politeness top-k per host → gated
+  fetch_extract: batch ⋈ pages → validation → extraction pUDF → exres
+  discover:      links: explode → bloom probe → discovery predicate → pe,
+                 frontier append
+  merge:         this round's events → updates → merged url_state
+  commit:        table commits, metrics, round record
 
 Determinism contract (north_rule: "matching the reference's crawl ordering
 and URL-seen set under the same seed list + politeness budget"):
@@ -30,7 +35,11 @@ from __future__ import annotations
 
 import hashlib
 import json
+import math
+import time
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -41,7 +50,9 @@ from ..functions.extract import extract_udf
 from ..operators import bloom
 from ..operators.scheduler import (
     consume_quota,
+    discovery_admit,
     per_host_budget,
+    pop_order,
     quota_cts,
     robots_allowed,
     scheduler_admit,
@@ -49,7 +60,6 @@ from ..operators.scheduler import (
 from ..rules import (
     detect_key_udf,
     detect_link,
-    quota_with_carry,
     rules_by_domain,
     rules_by_key,
 )
@@ -61,6 +71,14 @@ RANK_STRIDE = 1 << 32
 POP_OFFSET = 1 << 28  # seeds (offset 0) sort before quota pops within a rule
 DISC_RANK = 255  # discovery appends sort after all scheduled entries
 
+# fetch waves estimated below this many URLs broadcast the batch side of the
+# fetch join; larger waves shuffle-hash it (see fetch_extract)
+FETCH_BROADCAST_LIMIT = 100_000
+# commit pool width: one commit's driver-side tail (footer scans, manifest
+# writes) back-fills with the next commit's compute, while more concurrent
+# py4j write jobs stall each other (8-20x at local[32])
+COMMIT_WORKERS = 2
+
 DEFAULT_SETTINGS = {
     # reference defaults: /root/reference/instance/example/settings.json:8-19
     "schedule_quantity_limitation": 200,
@@ -71,7 +89,6 @@ DEFAULT_SETTINGS = {
     "buckets": 64,
     "default_host_budget": 1 << 30,
     "bloom_keys_per_bucket": 100_000,
-    "politeness_salts": 16,
 }
 
 def EMPTY_ARR():  # must be lazy: Column construction needs an active session
@@ -98,14 +115,15 @@ def _with_rule_cols(df: DataFrame, ctx: "CrawlContext", cols: list[str]) -> Data
     """Attach rule-config columns keyed on rule_key as ONE literal-map lookup
     instead of a broadcast join (guide §2.4/§2.6 job-count floor): rules are
     driver-known config (dozens), and every broadcast join against them costs
-    a SEPARATE sequential job per action (build + collect + relation) — the
-    event log showed 4-5 such sub-second jobs per round whose latency, not
-    compute, was the cost. element_at on a missing key yields NULL, exactly
-    the old left join. A real cluster keeps the same shape: the map literal
-    ships inside the task binary like any broadcast, minus the build job.
-    The map Column is built ONCE per context and reused across all sites and
-    rounds: Column construction is py4j-call-bounded, and rebuilding the
-    full literal at every site was measured at 3.4 s per 4-round crawl."""
+    a SEPARATE sequential job per action (build + collect + relation) whose
+    latency, not compute, is the cost. try_element_at yields NULL for a
+    rule_key missing from the rules on any Spark version (element_at raises
+    under ANSI on Spark 3.x) — the semantics of a left join. A real cluster
+    keeps the same shape: the map literal ships inside the task binary like
+    any broadcast, minus the build job. The map Column is built ONCE per
+    context and reused across all sites and rounds: Column construction is
+    py4j-call-bounded (rebuilding the literal at every site cost 3.4 s per
+    4-round crawl)."""
     if not ctx.rules:
         out = df
         for c in cols:
@@ -113,7 +131,7 @@ def _with_rule_cols(df: DataFrame, ctx: "CrawlContext", cols: list[str]) -> Data
                  "rule_rank": "int", "keywords": "array<string>"}.get(c, "string")
             out = out.withColumn(c, F.lit(None).cast(t))
         return out
-    looked = F.element_at(ctx.rules_map_col(tuple(cols)), F.col("rule_key"))
+    looked = F.try_element_at(ctx.rules_map_col(tuple(cols)), F.col("rule_key"))
     out = df.withColumn("_rl", looked)
     for c in cols:
         out = out.withColumn(c, F.col(f"_rl.{c}"))
@@ -190,6 +208,16 @@ class CrawlContext:
         self.rank = {r["key"]: i for i, r in enumerate(ranked)}
         self.total_rates = sum(r["rate"] for r in self.rules)
         self.lifo = {r["key"] for r in self.rules if r["schedule_rule"] == "LIFO"}
+        # rule-set and per-rule id_parameter signatures, recorded in round
+        # state so the next round can tell whether its frontier needs repair
+        self.known_keys = sorted(self.by_key)
+        self.rules_sig = hashlib.md5("|".join(self.known_keys).encode()).hexdigest()
+        self.id_sigs = {
+            k: hashlib.md5(
+                json.dumps(self.by_key[k].get("id_parameter") or []).encode()
+            ).hexdigest()
+            for k in self.known_keys
+        }
 
     def rules_map_col(self, cols: tuple[str, ...]):
         """Literal map rule_key → struct(cols) for _with_rule_cols, built
@@ -211,44 +239,22 @@ class CrawlContext:
         return self._rules_maps[cols]
 
     def rules_df(self) -> DataFrame:
-        rows = [
-            (
-                r["key"], float(r["rate"]), int(r["schedule_interval"]),
-                r.get("validation_keywords") or [], r["format"] == "binary",
-                r["type"], self.rank[r["key"]], r.get("encoding"),
-            )
-            for r in self.rules
-        ]
-        # one-slice frame (schema.local_df): each of this frame's ~4
-        # per-round broadcast builds was otherwise a cores-wide task launch
-        # (measured: 32-task 0-CPU stages dominating the per-round floor)
+        """(rule_key, rate, rule_rank), the quota_cts input, as one slice
+        (schema.local_df): each per-round broadcast build of a cores-wide
+        frame is a cores-wide task launch of 0-CPU tasks."""
         return schema.local_df(
-            self.spark, rows,
-            "rule_key string, rate double, interval_s int, keywords array<string>, "
-            "is_binary boolean, rule_type string, rule_rank int, encoding string",
+            self.spark,
+            [(r["key"], float(r["rate"]), self.rank[r["key"]]) for r in self.rules],
+            "rule_key string, rate double, rule_rank int",
         )
 
 
 def load_state(cat: Catalog) -> dict:
     rec = cat.last_completed_round()
     if rec is None:
-        return {"round": 0, "first_schedule": {}, "consumed": {}}
+        return {"round": 0, "first_schedule": {}}
     cat.restore_round(rec)  # crash-resume: discard any partial later round
     return rec["metrics"]["state"]
-
-
-def _frontier_filter(consumed: dict[str, list[list[int]]]):
-    """Mask consumed (popped) seq intervals — the append-only frontier story:
-    consumption advances per-rule interval metadata instead of rewriting
-    files (pops are contiguous in pop order, so each round adds ≤1 interval
-    per rule)."""
-    cond = F.lit(True)
-    for rk, intervals in consumed.items():
-        for lo, hi in intervals:
-            cond = cond & ~(
-                (F.col("rule_key") == rk) & F.col("seq").between(int(lo), int(hi))
-            )
-    return cond
 
 
 def _ev(events: list[str]):
@@ -260,38 +266,157 @@ def _ring3(col):
     return F.when(F.size(col) <= 3, col).otherwise(F.slice(col, -3, 3))
 
 
+@dataclass
+class _Round:
+    """What every phase of one round reads: the round clock, the seq base,
+    the manifest-known sizes (no Spark job), the state tables read once per
+    round, and the shuffle-width setter."""
+
+    spark: SparkSession
+    no: int
+    ts: int
+    seq_base: int
+    backlog: int  # scheduled rows carried from earlier rounds (llen)
+    balance: int  # quota left after the backlog
+    state_rows: int
+    frontier_rows: int
+    dpar: int
+    url_state: DataFrame
+    shards: DataFrame
+
+    def set_width(self, rows: int, floor: int = 1, cap: int | None = None):
+        """Shuffle width for the next action from its driver-known input
+        size: ~50k rows per task, at most two waves of cores."""
+        p = max(1, floor, min(cap or 2 * self.dpar, (rows + 49_999) // 50_000))
+        self.spark.conf.set("spark.sql.shuffle.partitions", str(p))
+
+
+class _Outcomes(NamedTuple):
+    """This round's schedule and fetch outcomes, read by discovery (as the
+    mid-round overlay), the state merge and the sinks."""
+
+    new_sched: DataFrame
+    ex: DataFrame
+    failed: DataFrame
+    denied: DataFrame
+
+
+def _open_round(ctx: CrawlContext, state: dict) -> _Round:
+    spark, cat, st = ctx.spark, ctx.catalog, ctx.settings
+    no = state["round"] + 1
+
+    def rows(name):
+        man = cat.manifest(name)
+        return man["total_rows"] if man else 0
+
+    backlog = rows("scheduled")  # llen from the manifest, no job
+    # Adaptive physical width: every action's input size is driver-known
+    # BEFORE it runs (snapshot manifests + stage parquet footers), so each
+    # phase sets the shuffle width instead of paying a cores-wide task launch
+    # for every tiny stage: a converged round's maintenance stages run 1-4
+    # tasks while wave stages fan to 2x cores, and the per-round floor does
+    # not grow with the cluster. AQE is OFF inside the round: its
+    # partitioning is deterministic by construction (md5-uniform url_hash
+    # keys, salted politeness, bucketed prefix sums, manifest-known sizes),
+    # so runtime re-planning has no information advantage, and its
+    # per-exchange materialization barriers double the driver jobs per round
+    # (127 vs 59). Analytic queries outside run_round keep AQE on.
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    return _Round(
+        spark=spark, no=no,
+        ts=ctx.base_ts + no * st["schedule_interval"] * 1000,
+        seq_base=no * ROUND_STRIDE,
+        backlog=backlog,
+        balance=max(0, st["schedule_quantity_limitation"] - backlog),
+        state_rows=rows("url_state"),
+        frontier_rows=rows("frontier"),
+        dpar=spark.sparkContext.defaultParallelism,
+        url_state=cat.read(spark, "url_state", schema.URL_STATE),
+        shards=cat.read(spark, "bloom", bloom.BLOOM_SCHEMA),
+    )
+
+
 def run_round(ctx: CrawlContext, state: dict | None = None) -> dict:
-    """Adaptive-width wrapper: the round body retunes
-    spark.sql.shuffle.partitions per phase from manifest/footer row counts
-    and (by default) plans with AQE off — restore both afterwards so
-    co-resident analytic queries keep the session defaults."""
-    spark = ctx.spark
+    """Run one crawl round, phase by phase, and commit it. Returns
+    the new round state.
+
+    The phases retune spark.sql.shuffle.partitions from manifest/footer row
+    counts and plan with AQE off; both are restored afterwards so
+    co-resident analytic queries keep the session defaults. Each `phase_s`
+    mark fires after its phase's last action.
+
+    Staging policy: every phase's cut point is ALWAYS materialized. Inlining
+    the cheap JVM chain for small rounds would drop the parquet size stats
+    at the cut; the planner then loses the "batch side is tiny" signal for
+    the fetch join and shuffles the corpus side, which costs far more than
+    the stage-write job."""
+    spark, cat = ctx.spark, ctx.catalog
     saved = {k: spark.conf.get(k) for k in
              ("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")}
+    t_start, phase_s, done = time.time(), {}, [0.0]
+
+    def mark(name):
+        # phases split the round's elapsed time floored to 10 ms, so they
+        # never sum to more than the round took
+        at = math.floor((time.time() - t_start) * 100) / 100
+        phase_s[name] = round(at - done[0], 2)
+        done[0] = at
+
     try:
-        return _run_round_body(ctx, state)
+        if state is None:
+            state = load_state(cat)
+        rnd = _open_round(ctx, state)
+        fr2, seeds, n_seeds, first_sched = admit(ctx, rnd, state)
+        mark("admit")
+        batch, new_sched, denied = gate(ctx, rnd, fr2, seeds, n_seeds)
+        mark("gate")
+        ex, failed, batch_rows = fetch_extract(ctx, rnd, batch, n_seeds)
+        mark("fetch_extract")
+        out = _Outcomes(new_sched, ex, failed, denied)
+        pe, frontier_append = discover(ctx, rnd, out, batch_rows)
+        mark("discover")
+        updates, merged, parts = merge(ctx, rnd, out, pe)
+        mark("merge")
+        snaps, round_metrics = commit(ctx, rnd, out, frontier_append, updates,
+                                      merged, parts, batch_rows)
+        mark("commit")
     finally:
         for k, v in saved.items():
             spark.conf.set(k, v)
 
+    round_metrics["phase_s"] = phase_s
+    new_state = {
+        "round": rnd.no,
+        "first_schedule": first_sched,
+        # the committed frontier now holds ONLY entries written under the
+        # current rule set (repair ran this round if it was needed), so the
+        # signature history collapses to the live one
+        "rules_sigs": [ctx.rules_sig],
+        # per-rule id_parameter signatures: next round re-canonicalizes the
+        # frontier slice of any rule whose signature changed (transformLink)
+        "id_sigs": ctx.id_sigs,
+    }
+    cat.commit_round(rnd.no, snaps, {"state": new_state, "round_metrics": round_metrics})
+    # this round's stages are dead once the round record is committed (resume
+    # replays from committed snapshots, never from stages); sweep the
+    # previous round's too in case an earlier run crashed mid-round
+    cat.drop_stages(rnd.no)
+    if rnd.no > 1:
+        cat.drop_stages(rnd.no - 1)
+    if ctx.alert_hook is not None:
+        ctx.alert_hook(rnd.no, round_metrics)
+    breaker = ctx.settings.get("failure_breaker")
+    if breaker is not None:
+        n_bad = round_metrics["failed"] + round_metrics["denied"]
+        if n_bad >= breaker:
+            raise CircuitBreakerTripped(
+                f"round {rnd.no}: {n_bad} failures >= breaker {breaker}"
+            )
+    return new_state
 
-def _run_round_body(ctx: CrawlContext, state: dict | None = None) -> dict:
-    import time as _time
-    _t = {"start": _time.time()}
-    def _mark(name):
-        _t[name] = _time.time()
-    spark, cat, st = ctx.spark, ctx.catalog, ctx.settings
-    if state is None:
-        state = load_state(cat)
-    round_no = state["round"] + 1
-    round_ts = ctx.base_ts + round_no * st["schedule_interval"] * 1000
-    buckets = st["buckets"]
-    seq_base = round_no * ROUND_STRIDE
 
-    url_state = cat.read(spark, "url_state", schema.URL_STATE)
-    frontier = cat.read(spark, "frontier", schema.FRONTIER).where(
-        _frontier_filter(state.get("consumed", {}))
-    )
+def _repair_frontier(ctx: CrawlContext, state: dict, frontier: DataFrame) -> DataFrame:
+    known_keys = ctx.known_keys
     # Stale-trace repair on pop (checkURL, scheduler/index.js:350-370): when
     # the rule set changed between rounds, frontier entries whose rule_key no
     # longer exists are re-matched against the live rules (pUDF over the
@@ -301,10 +426,7 @@ def _run_round_body(ctx: CrawlContext, state: dict | None = None) -> dict:
     # the reference's lpop-then-drop. GATED on the rule-set
     # signature recorded in round state: the common path (config unchanged
     # since the frontier was written) pays nothing — no union, no pUDF.
-    known_keys = sorted(ctx.by_key.keys())
-    rules_sig = hashlib.md5("|".join(known_keys).encode()).hexdigest()
-    seen_sigs = set(state.get("rules_sigs") or [])
-    if seen_sigs - {rules_sig}:  # frontier may hold keys from other rule sets
+    if set(state.get("rules_sigs") or []) - {ctx.rules_sig}:
         stale = frontier.where(~F.col("rule_key").isin(known_keys))
         frontier = frontier.where(F.col("rule_key").isin(known_keys)).unionByName(
             stale.withColumn("rule_key", detect_key_udf(ctx.by_domain)(F.col("url")))
@@ -317,18 +439,12 @@ def _run_round_body(ctx: CrawlContext, state: dict | None = None) -> dict:
     # reference then consults url_info under the NEW hash — entries whose
     # transformed form is unknown are consumed unscheduled ('not exists in
     # urlinfo' → callback(false)), entries collapsing onto one form merge via
-    # the first-occurrence admission window below. GATED on per-rule
+    # the first-occurrence admission window in admit. GATED on per-rule
     # id_parameter signatures in round state: unchanged config pays nothing.
-    id_sigs = {
-        k: hashlib.md5(
-            json.dumps(ctx.by_key[k].get("id_parameter") or []).encode()
-        ).hexdigest()
-        for k in known_keys
-    }
     prev_id_sigs = state.get("id_sigs") or {}
     changed_keys = [
         k for k in known_keys
-        if k in prev_id_sigs and prev_id_sigs[k] != id_sigs[k]
+        if k in prev_id_sigs and prev_id_sigs[k] != ctx.id_sigs[k]
     ]
     if changed_keys:
         id_map = {k: ctx.by_key[k].get("id_parameter") for k in changed_keys}
@@ -337,59 +453,19 @@ def _run_round_body(ctx: CrawlContext, state: dict | None = None) -> dict:
             .withColumn("url", canon.canonicalize_udf(id_map)(F.col("url"), F.col("rule_key")))
             .drop("url_hash", "bucket")
         )
-        sl = canon.with_url_identity(sl, buckets=st["buckets"])
+        sl = canon.with_url_identity(sl, buckets=ctx.settings["buckets"])
         keep = frontier.where(~F.col("rule_key").isin(changed_keys))
         frontier = keep.unionByName(sl.select(*keep.columns))
-    scheduled = cat.read(spark, "scheduled", schema.SCHEDULED)
-    shards = cat.read(spark, "bloom", bloom.BLOOM_SCHEMA)
-    rules_df = ctx.rules_df()
+    return frontier
 
-    man = cat.manifest("scheduled")
-    backlog = man["total_rows"] if man else 0  # llen from manifest, no job
-    balance = max(0, st["schedule_quantity_limitation"] - backlog)
-    man_us = cat.manifest("url_state")
-    _state_rows = man_us["total_rows"] if man_us else 0
-    man_fr = cat.manifest("frontier")
-    _frontier_rows = man_fr["total_rows"] if man_fr else 0
 
-    # ---------------- adaptive physical width (manifest-driven)
-    # Every action's input size is driver-known BEFORE it runs (snapshot
-    # manifests + stage parquet footers), so the ENGINE sets the shuffle
-    # width per phase instead of paying a cores-wide task launch for every
-    # tiny stage: a converged round's maintenance stages run 1-4 tasks while
-    # wave stages fan to 2x cores. This is what keeps the per-round floor
-    # from GROWING with the cluster (r4 scaling: a 1.6k-row gated stage
-    # spent more wall at local[16] than at local[4] purely on task launch +
-    # py4j latency; at 1000 executors a 16k-task empty stage would be worse).
-    # AQE is OFF inside the round by default (settings round_aqe=True to
-    # re-enable): the round's partitioning is deterministic by construction
-    # — md5-uniform url_hash keys, salted politeness, bucketed prefix sums,
-    # manifest-known sizes — so runtime re-planning has no information
-    # advantage, and its per-exchange materialization barriers are a
-    # measured ~2x job-count overhead per round (127 vs 59 driver jobs).
-    # Analytic queries outside run_round keep AQE on (session default).
-    _dpar = spark.sparkContext.defaultParallelism
-    _adaptive_w = st.get("adaptive_shuffle", True)
-
-    def _set_width(rows: int, floor: int = 1, cap: int | None = None):
-        if _adaptive_w:
-            p = max(1, floor, min(cap or 2 * _dpar, (rows + 49_999) // 50_000))
-            spark.conf.set("spark.sql.shuffle.partitions", str(p))
-    if _adaptive_w and not st.get("round_aqe", False):
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-
-    # Staging policy: every cut point is ALWAYS materialized. (Measured
-    # alternative: inlining the cheap JVM chain for small rounds removes the
-    # parquet size stats at the cut, the planner loses the "batch side is
-    # tiny" signal for the fetch join, and the 2GB corpus side gets shuffled
-    # — a round-1 wave went 43s → 121s. The stats at the cut are worth the
-    # stage-write job.)
-
-    # ---------------- A1: seed reschedule (scheduler/index.js:163-198)
+def _seed_rows(ctx: CrawlContext, rnd: _Round, state: dict) -> tuple[list, dict]:
+    """Seed reschedule (scheduler/index.js:163-198): the seed rows due this
+    round and the updated per-rule first_schedule clock."""
     first_sched = dict(state.get("first_schedule", {}))
     seed_rows = []
     for r in ctx.rules:
-        if round_ts - first_sched.get(r["key"], 0) >= r["schedule_interval"] * 1000:
+        if rnd.ts - first_sched.get(r["key"], 0) >= r["schedule_interval"] * 1000:
             order = 0
             for s in r["seed"]:
                 for link in canon.expand_seed(s):
@@ -401,21 +477,29 @@ def _run_round_body(ctx: CrawlContext, state: dict | None = None) -> dict:
                     )
                     order += 1
             if r["seed"]:
-                first_sched[r["key"]] = round_ts
-    # one-slice frame: seed lists are config-sized; a defaultParallelism-
-    # sliced frame costs a cores-wide launch per broadcast build (see rules_df)
-    seeds_df = schema.local_df(
+                first_sched[r["key"]] = rnd.ts
+    return seed_rows, first_sched
+
+
+def admit(ctx: CrawlContext, rnd: _Round, state: dict):
+    """Frontier repair, seed reschedule and quota admission (frontier ⋈
+    url_state). Returns (fr2, seeds, seed count, first_schedule): fr2 is the
+    staged frontier with `popped`/`sched`/`sched_rank`, partitioned by
+    popped."""
+    spark, cat = ctx.spark, ctx.catalog
+    frontier = _repair_frontier(ctx, state, cat.read(spark, "frontier", schema.FRONTIER))
+    seed_rows, first_sched = _seed_rows(ctx, rnd, state)
+    # one-slice frame: seed lists are config-sized (see rules_df)
+    seeds = schema.local_df(
         spark, seed_rows,
         "url_hash string, url string, rule_key string, host string, ord long",
     )
-
-    # ---------------- A2: quota admission (frontier ⋈ url_state)
     # equi hash join on url_hash; both sides bucketed identically, so a real
-    # catalog makes this storage-partitioned (shuffle-free); here AQE decides.
+    # catalog makes this storage-partitioned (shuffle-free)
     fr = (
         _with_rule_cols(
             frontier.join(
-                url_state.select("url_hash", "status", "last", "version"),
+                rnd.url_state.select("url_hash", "status", "last", "version"),
                 "url_hash", "left",
             ),
             ctx, ["interval_s", "rule_rank"],
@@ -423,7 +507,7 @@ def _run_round_body(ctx: CrawlContext, state: dict | None = None) -> dict:
         .withColumn(
             "admit_pre",
             # missing url_info → popped but not counted (checkURL:347)
-            F.col("status").isNotNull() & scheduler_admit(round_ts, F.col("interval_s")),
+            F.col("status").isNotNull() & scheduler_admit(rnd.ts, F.col("interval_s")),
         )
     )
     # Sequential-pop fidelity: once a URL is scheduled this round (by a seed
@@ -432,103 +516,76 @@ def _run_round_body(ctx: CrawlContext, state: dict | None = None) -> dict:
     # (checkURL:381-388). Pre-round state can't see that, so: (a) frontier
     # entries for this round's seed URLs never admit; (b) only the FIRST
     # occurrence of a url_hash in global pop order admits.
-    pop_order_global = F.when(
-        F.col("rule_key").isin(*ctx.lifo) if ctx.lifo else F.lit(False), -F.col("seq")
-    ).otherwise(F.col("seq"))
-    w_dup = Window.partitionBy("url_hash").orderBy("rule_rank", pop_order_global)
-    # seed url_hashes are driver-known (seed_rows was built in Python above):
-    # probe them as an isin literal (InSet past 10 values) instead of a
-    # broadcast join — one fewer broadcast-build job in the fr2 plan. Guarded
-    # to config-sized lists; a pathological seed file keeps the join.
+    w_dup = Window.partitionBy("url_hash").orderBy("rule_rank", pop_order(ctx.lifo))
+    # seed url_hashes are driver-known: probe them as an isin literal (InSet
+    # past 10 values) instead of a broadcast join — one fewer broadcast-build
+    # job in the fr2 plan
     seed_hashes = sorted({r[0] for r in seed_rows})
-    if len(seed_hashes) <= 100_000:
-        not_seed_url = (~F.col("url_hash").isin(seed_hashes)
-                        if seed_hashes else F.lit(True))
-        fr = fr.withColumn("dup_rn", F.row_number().over(w_dup)).withColumn(
-            "admit",
-            F.col("admit_pre") & not_seed_url & (F.col("dup_rn") == 1),
-        ).drop("dup_rn", "admit_pre")
-    else:
-        fr = (
-            fr.join(
-                F.broadcast(seeds_df.select("url_hash").distinct()
-                            .withColumn("is_seed_url", F.lit(True))),
-                "url_hash", "left",
-            )
-            .withColumn("dup_rn", F.row_number().over(w_dup))
-            .withColumn(
-                "admit",
-                F.col("admit_pre") & F.col("is_seed_url").isNull() & (F.col("dup_rn") == 1),
-            )
-            .drop("is_seed_url", "dup_rn", "admit_pre")
-        )
+    not_seed_url = ~F.col("url_hash").isin(seed_hashes) if seed_hashes else F.lit(True)
+    fr = fr.withColumn("dup_rn", F.row_number().over(w_dup)).withColumn(
+        "admit",
+        F.col("admit_pre") & not_seed_url & (F.col("dup_rn") == 1),
+    ).drop("dup_rn", "admit_pre")
     # The quota aggregate below and the consumption window both read `fr`;
     # Catalyst has no common-subtree reuse, so the frontier⋈state subtree
     # appears TWICE inside the fr2 job. That is deliberate: the aggregate
     # branch is column-pruned to (rule_key, admit inputs) with a map-side
     # combine, so its re-evaluation is cheaper than a dedicated fr_admit
-    # materialization job (+~5 AQE sub-jobs of driver latency per round —
-    # measured; the old staged variant is one `stg("fr_admit", fr)` away).
+    # materialization job and its driver latency.
     avail_df = fr.groupBy("rule_key").agg(
         F.sum(F.col("admit").cast("long")).alias("available")
     )
-    avg_rate = (balance / ctx.total_rates) if ctx.total_rates else 0.0
-    ct_df = quota_cts(avail_df, rules_df, avg_rate)
+    avg_rate = (rnd.balance / ctx.total_rates) if ctx.total_rates else 0.0
+    ct_df = quota_cts(avail_df, ctx.rules_df(), avg_rate)
     # fr2 feeds the scheduled queue AND the frontier rewrite (two actions).
     # Partitioned by `popped` WITHOUT reshuffle (boolean col, upstream quota
     # window already partitioned the data): the frontier commit then ADOPTS
     # the popped=false files driver-side (commit_files hardlink + manifest)
     # instead of re-writing the surviving frontier through a second Spark job
-    # — at wave scale that job re-wrote the whole remaining frontier.
+    # — at wave scale that job would re-write the whole remaining frontier.
     fr2_plan = consume_quota(fr, ct_df, ctx.lifo)
-    if _frontier_rows == 0:
+    if rnd.frontier_rows == 0:
         # empty frontier (manifest-known, no job): the quota machinery would
-        # still run ~7 AQE sub-jobs over zero rows at ~2s of pure driver
-        # latency each (r3 event-log measurement) — stage an empty frame
-        # with the identical schema instead
-        fr2 = cat.stage(spark, round_no, "fr2",
-                        schema.local_df(spark, [], fr2_plan.schema),
-                        partition_by=["popped"], shuffle=False)
+        # still run ~7 sub-jobs over zero rows at ~2 s of pure driver latency
+        # each — stage an empty frame with the identical schema instead
+        fr2_plan = schema.local_df(spark, [], fr2_plan.schema)
     else:
-        _set_width(_frontier_rows + len(seed_rows))
-        fr2 = cat.stage(spark, round_no, "fr2", fr2_plan,
-                        partition_by=["popped"], shuffle=False)
-    popped_bounds = (
-        fr2.where("popped").groupBy("rule_key")
-        .agg(F.min("seq").alias("lo"), F.max("seq").alias("hi")).collect()
-        if st.get("collect_pop_metrics") else []
-    )
+        rnd.set_width(rnd.frontier_rows + len(seed_rows))
+    fr2 = cat.stage(spark, rnd.no, "fr2", fr2_plan, partition_by=["popped"], shuffle=False)
+    return fr2, seeds, len(seed_rows), first_sched
 
-    # ---------------- A3: assemble the scheduled queue (rpush order pinned)
-    sched_seeds = seeds_df.withColumn(
+
+def gate(ctx: CrawlContext, rnd: _Round, fr2: DataFrame, seeds: DataFrame,
+         n_seeds: int):
+    """Assemble the scheduled queue (backlog ∪ seeds ∪ quota pops, rpush
+    order pinned into seq) and run the robots + per-host politeness gate
+    (north_rule; no reference analog). Stages `gated`, partitioned by disp
+    (batch | denied | left). Returns (batch, new_sched, denied)."""
+    spark, cat, st = ctx.spark, ctx.catalog, ctx.settings
+    seq_base = rnd.seq_base
+    sched_seeds = _with_rule_cols(seeds, ctx, ["rule_rank"]).withColumn(
         "seq",
         F.lit(seq_base)
-        + _rank_expr(ctx) * F.lit(RANK_STRIDE)
+        + F.coalesce("rule_rank", F.lit(DISC_RANK)).cast("long") * F.lit(RANK_STRIDE)
         + F.row_number().over(Window.partitionBy("rule_key").orderBy("ord", "url")),
-    ).withColumn("is_seed", F.lit(True)).drop("ord")
+    ).withColumn("is_seed", F.lit(True)).drop("ord", "rule_rank")
     # sched_rank was computed inside the fr2 stage's quota window (same sort)
-    sched_quota = (
-        fr2.where("sched")
-        .withColumn(
-            "seq_new",
-            F.lit(seq_base)
-            + F.col("rule_rank").cast("long") * F.lit(RANK_STRIDE)
-            + F.lit(POP_OFFSET)
-            + F.col("sched_rank"),
-        )
-        .select("url_hash", "url", "rule_key", "host",
-                F.col("seq_new").alias("seq"), F.lit(False).alias("is_seed"))
+    sched_quota = fr2.where("sched").select(
+        "url_hash", "url", "rule_key", "host",
+        (F.lit(seq_base) + F.col("rule_rank").cast("long") * F.lit(RANK_STRIDE)
+         + F.lit(POP_OFFSET) + F.col("sched_rank")).alias("seq"),
+        F.lit(False).alias("is_seed"),
     )
-    hydrate = url_state.select(
+    hydrate = rnd.url_state.select(
         "url_hash", F.col("referer").alias("h_referer"),
         F.col("drill_relation").alias("h_relation"), F.col("version").alias("h_version"),
     )
-    # new_sched is NOT staged on its own (r2 ran a dedicated write job per
-    # round): it rides INTO the gated stage below tagged is_new, and every
-    # post-gate consumer (upd_sched, mid-round overlay, seed_new) reads it
-    # back as gated.where(is_new) — one materialization covers both frames.
-    # The hydrate join and quota-pop projection evaluate exactly once, inside
-    # the gated write, reading the already-staged fr2 parquet.
+    # new_sched is NOT staged on its own: it rides INTO the gated stage below
+    # tagged is_new, and every post-gate consumer (upd_sched, mid-round
+    # overlay, seed_new) reads it back as gated.where(is_new) — one
+    # materialization covers both frames. The hydrate join and quota-pop
+    # projection evaluate exactly once, inside the gated write, reading the
+    # already-staged fr2 parquet.
     new_sched_plan = (
         sched_seeds.unionByName(sched_quota)
         .join(hydrate, "url_hash", "left")  # spider.js:221-241 hydration
@@ -539,20 +596,20 @@ def _run_round_body(ctx: CrawlContext, state: dict | None = None) -> dict:
             F.col("h_relation").alias("drill_relation"),
             # seeds: version = schedule_version (reSchedule:182); pops keep
             # the stored version (checkURL passes version=false :396)
-            F.when(F.col("is_seed"), F.lit(round_ts)).otherwise(F.col("h_version"))
+            F.when(F.col("is_seed"), F.lit(rnd.ts)).otherwise(F.col("h_version"))
             .alias("version"),
             "is_seed",
         )
     )
-    queue = scheduled.withColumn("is_seed", F.lit(False)).withColumn(
-        "is_new", F.lit(False)
-    ).unionByName(new_sched_plan.withColumn("is_new", F.lit(True)))
+    queue = cat.read(spark, "scheduled", schema.SCHEDULED).withColumn(
+        "is_seed", F.lit(False)
+    ).withColumn("is_new", F.lit(False)).unionByName(
+        new_sched_plan.withColumn("is_new", F.lit(True))
+    )
 
-    # ---------------- B1: politeness gate (north_rule; no reference analog)
     # ONE staged frame carries the whole gate outcome (allowed + in_budget +
-    # fetch offset): batch / denied / leftover are filters over it — the old
-    # separate denied/batch stage writes + leftover anti-join were 2 extra
-    # jobs per round of pure floor (r1 scaling verdict).
+    # fetch offset): batch / denied / leftover are filters over it, not
+    # separate stage writes plus a leftover anti-join (2 more jobs per round).
     robots = (ctx.robots if ctx.robots is not None
               else schema.local_df(spark, [], schema.ROBOTS))
     q = queue.join(F.broadcast(robots), "host", "left").withColumn(
@@ -560,23 +617,22 @@ def _run_round_body(ctx: CrawlContext, state: dict | None = None) -> dict:
         F.coalesce("max_fetches_per_round", F.lit(st["default_host_budget"])),
     )
     allowed_col = robots_allowed(F.col("url"), F.col("host"), F.col("disallow"))
-    _set_width(backlog + min(balance, _frontier_rows) + len(seed_rows))
-    # qa staged ONCE (guide §2.4/§1.5): the gated write's four union branches
-    # (per_host_budget's ungated/survivors/over + the robots-denied branch)
-    # each re-evaluated the queue ⋈ robots ⋈ hydrate subtree — the event log
-    # showed the robots broadcast BUILT four times per round (4 sequential
-    # sub-jobs) plus four map passes over the wave. Branches now filter a
-    # parquet scan with footer-known stats; the seeds-window exchange the
-    # planner already reused stays reused.
-    qa = cat.stage(spark, round_no, "qa", q.withColumn("allowed", allowed_col))
-    surv = per_host_budget(qa.where("allowed"), ["seq"], salts=st["politeness_salts"])
+    rnd.set_width(rnd.backlog + min(rnd.balance, rnd.frontier_rows) + n_seeds)
+    # qa staged ONCE (guide §2.4/§1.5): otherwise each of the gated write's
+    # four union branches (per_host_budget's ungated/survivors/over + the
+    # robots-denied branch) re-evaluates the queue ⋈ robots ⋈ hydrate
+    # subtree, building the robots broadcast four times (four sequential
+    # sub-jobs) and making four map passes over the wave. Branches filter a
+    # parquet scan with footer-known stats instead.
+    qa = cat.stage(spark, rnd.no, "qa", q.withColumn("allowed", allowed_col))
+    surv = per_host_budget(qa.where("allowed"), ["seq"])
     # disp partitions the stage into the three consumer row-sets; no reshuffle
     # (3-value col — clustering would collapse the wave write to 3 tasks).
     # Downstream filters become partition PRUNING, and the leftover set is
-    # committed to `scheduled` by ADOPTING its partition files driver-side —
-    # the old leftover write was a whole extra Spark job per round.
+    # committed to `scheduled` by ADOPTING its partition files driver-side,
+    # with no leftover write job.
     gated = cat.stage(
-        spark, round_no, "gated",
+        spark, rnd.no, "gated",
         surv.unionByName(
             qa.where(~F.col("allowed"))
             .withColumn("host_rank", F.lit(None).cast("int"))
@@ -599,35 +655,48 @@ def _run_round_body(ctx: CrawlContext, state: dict | None = None) -> dict:
         ),
         partition_by=["disp"], shuffle=False,
     )
-    batch = gated.where("disp = 'batch'").drop("allowed", "in_budget", "disp")
-    denied = gated.where("disp = 'denied'").select("url_hash", "url", "rule_key", "host", "seq")
-    new_sched = gated.where("is_new").select(
-        "url_hash", "url", "rule_key", "host", "seq", "retry", "referer",
-        "drill_relation", "version", "is_seed",
+    return (
+        gated.where("disp = 'batch'").drop("allowed", "in_budget", "disp"),
+        gated.where("is_new").select(
+            "url_hash", "url", "rule_key", "host", "seq", "retry", "referer",
+            "drill_relation", "version", "is_seed",
+        ),
+        gated.where("disp = 'denied'").select("url_hash", "url", "rule_key", "host", "seq"),
     )
-    _mark("batch_done")
 
-    # ---------------- B2: fetch = batch ⋈ pages (the corpus-as-network join)
+
+_SLIM_COLS = [
+    "url_hash", "url", "rule_key", "host", "seq", "retry", "referer",
+    "drill_relation", "version", "rule_type", "is_binary",
+]
+
+
+def fetch_extract(ctx: CrawlContext, rnd: _Round, batch: DataFrame, n_seeds: int):
+    """Fetch (batch ⋈ pages, the corpus standing in for the network),
+    validation and the extraction pUDF in ONE pass, staged as `exres`.
+    Returns (ex, failed, batch row count): ex holds the valid rows with the
+    `ex` struct, failed the invalid rows and fetch misses."""
+    spark, cat, st = ctx.spark, ctx.catalog, ctx.settings
     # Join strategy is BATCH-SIZE-ADAPTIVE (driver-sized from manifests):
     # * small batches broadcast (INNER join): the corpus is a pure streaming
     #   scan probed by a hash table of the quota-bounded batch — the html
     #   payload never enters a shuffle, and the broadcast is cheap.
     # * large waves use a SHUFFLE_HASH join instead: a broadcast's
-    #   driver-side collect + hash-relation build is SINGLE-THREADED O(batch)
-    #   — measured as the dominant per-round floor term at the 1.2M-URL
-    #   scaling wave (~50 s/round core-count-independent; r3). The shuffle
-    #   moves that cost into the parallel slope: html rows shuffle once,
-    #   hash-partitioned — and SHUFFLE_HASH (not SMJ) avoids sorting them.
+    #   driver-side collect + hash-relation build is SINGLE-THREADED O(batch),
+    #   which dominates the round at ~1M-URL waves whatever the core count.
+    #   The shuffle moves that cost into the parallel slope: html rows
+    #   shuffle once, hash-partitioned — and SHUFFLE_HASH (not SMJ) avoids
+    #   sorting them.
     #   With a BUCKETED corpus (sources/bucketed.py: pass the bucketBy(url)
     #   table as ctx.pages) even that shuffle disappears: the bucketed scan
     #   reports hashpartitioning(url, n_buckets), so only the slim batch
     #   side exchanges and html never moves — the storage-partitioned join
     #   (tests/test_bucketed_join.py pins the plan; Iceberg analog at prod).
-    # include the scheduled backlog in the estimate: the fetch wave is
+    # The estimate includes the scheduled backlog: the fetch wave is
     # queue = scheduled ∪ new_sched, so a backlog-dominated round
-    # (balance≈0) is still a large wave (r2 ADVICE)
-    approx_batch = min(balance, _frontier_rows) + len(seed_rows) + backlog
-    small_batch = approx_batch < st.get("fetch_broadcast_limit", 100_000)
+    # (balance≈0) is still a large wave.
+    approx_batch = min(rnd.balance, rnd.frontier_rows) + n_seeds + rnd.backlog
+    small_batch = approx_batch < FETCH_BROADCAST_LIMIT
     if ctx.download_hook is not None:
         fetched = ctx.download_hook(batch, ctx.pages)
     elif small_batch:
@@ -656,28 +725,25 @@ def _run_round_body(ctx: CrawlContext, state: dict | None = None) -> dict:
         )
     )
 
-    # ---------------- B3: extraction (validation → big pUDF, JVM-side gate)
     # ONE pass over the fetch join covers both outcomes: the pUDF sees html
     # only for valid rows (when(valid, html) → None otherwise, handled as
     # empty result), so invalid/missing rows ride along for free and the
-    # 805MB-scan corpus join runs exactly once per round.
+    # corpus join runs exactly once per round.
     #
     # Parallelism for the pUDF: small batches are light in BYTES but heavy in
-    # per-row cost, so AQE/scan-split sizing under-parallelizes them — an
-    # explicitly-numbered repartition (~300 pages/task, driver-sized from
-    # manifests) fixes that, and its shuffle is tiny. LARGE waves must NOT
-    # repartition: that would push the multi-GB html column through a
-    # shuffle; they instead ride the corpus scan's file splits, which are
-    # plentiful exactly when the wave is large (spark.sql.files.
-    # maxPartitionBytes=64m in session.py keeps scan splits ≈ 2×cores for
-    # multi-GB corpora).
+    # per-row cost, so scan-split sizing under-parallelizes them — an
+    # explicitly-numbered repartition (driver-sized from manifests) fixes
+    # that, and its shuffle is tiny. LARGE waves must NOT repartition: that
+    # would push the multi-GB html column through a shuffle; they instead
+    # ride the corpus scan's file splits, which are plentiful exactly when
+    # the wave is large (spark.sql.files.maxPartitionBytes=64m in session.py
+    # keeps scan splits ≈ 2×cores for multi-GB corpora).
     # ~100 pages/task, floored at the core count once there's at least one
     # page per core: hub-heavy rounds (few pages, hundreds of links each)
-    # must still fan out across all cores — r3 measured the old 300/task
-    # sizing capping a 1589-hub round at 7 tasks at any core count. Rounded
-    # UP to a multiple of the core count: 21 tasks on 16 cores is a 1.3-wave
-    # straggler tail; 32 is two clean waves.
-    dpar = spark.sparkContext.defaultParallelism
+    # must still fan out across all cores. Rounded UP to a multiple of the
+    # core count: 21 tasks on 16 cores is a 1.3-wave straggler tail; 32 is
+    # two clean waves.
+    dpar = rnd.dpar
     par = max(1, min(dpar * 2,
                      max(approx_batch // 100 + 1,
                          dpar if approx_batch >= dpar else 1)))
@@ -686,10 +752,6 @@ def _run_round_body(ctx: CrawlContext, state: dict | None = None) -> dict:
     fv_par = fv.repartition(par, F.col("url_hash")) if approx_batch < 50_000 else fv
     save_page_keys = [r["key"] for r in ctx.rules
                       if r.get("save_page") or r["format"] == "binary"]
-    slim_cols = [
-        "url_hash", "url", "rule_key", "host", "seq", "retry", "referer",
-        "drill_relation", "version", "rule_type", "is_binary",
-    ]
     exres_plan = (
         fv_par
         .withColumn(
@@ -700,7 +762,7 @@ def _run_round_body(ctx: CrawlContext, state: dict | None = None) -> dict:
             ),
         )
         .select(
-            *slim_cols, "valid",
+            *_SLIM_COLS, "valid",
             F.col("html").isNull().alias("missing"),
             (F.when(F.col("valid") & F.col("rule_key").isin(save_page_keys), F.col("html"))
              if save_page_keys else F.lit(None).cast("binary")).alias("page_content"),
@@ -709,50 +771,52 @@ def _run_round_body(ctx: CrawlContext, state: dict | None = None) -> dict:
     )
     # batch emptiness is footer-known from the gated stage: a converged round
     # (nothing to fetch) must not pay the corpus-scan fetch join
-    batch_rows = cat.stage_rows(round_no, "gated", disp="batch")
+    batch_rows = cat.stage_rows(rnd.no, "gated", disp="batch")
     if batch_rows == 0 and ctx.download_hook is None:
-        exres = cat.stage(spark, round_no, "exres",
-                          schema.local_df(spark, [], exres_plan.schema))
+        exres_plan = schema.local_df(spark, [], exres_plan.schema)
     else:
         # extraction is per-row-expensive python: keep at least a full wave
         # of tasks whenever there is at least one page per core (the
         # explicit small-batch repartition above already handles hub-heavy
         # tiny rounds; this floor covers the SHUFFLE_HASH width)
-        _set_width(batch_rows, floor=min(_dpar, batch_rows))
-        exres = cat.stage(spark, round_no, "exres", exres_plan)
+        rnd.set_width(batch_rows, floor=min(dpar, batch_rows))
+    exres = cat.stage(spark, rnd.no, "exres", exres_plan)
     # Fetch misses (batch rows with no corpus page) are absent from the
     # inner fetch join — recover them against the STAGED result so the
-    # anti-join's build side is bounded by the batch, never the corpus.
+    # anti-join's build side is bounded by the batch, never the corpus; it
+    # broadcasts only below the fetch join's threshold (the driver-side hash
+    # build is O(batch) single-threaded — slim shuffle otherwise).
     # (download_hook may return left-join semantics with null-html rows;
     # those already sit in exres as missing and the anti-join adds nothing.)
-    # anti-join build side bounded by the batch, never the corpus; broadcast
-    # only below the same threshold as the fetch join (the driver-side hash
-    # build is O(batch) single-threaded — slim shuffle otherwise)
-    _exres_keys = exres.select("url_hash")
+    exres_keys = exres.select("url_hash")
     missing_rows = _with_rule_cols(
-        batch.join(F.broadcast(_exres_keys) if small_batch else _exres_keys,
+        batch.join(F.broadcast(exres_keys) if small_batch else exres_keys,
                    "url_hash", "left_anti"),
         ctx, ["rule_type", "is_binary"],
-    ).select(*slim_cols, F.lit(True).alias("missing"))
+    ).select(*_SLIM_COLS, F.lit(True).alias("missing"))
     # ex reads the STAGED parquet directly (valid rows only — misses are
     # never valid, so they need not ride along); `failed` is slim-column.
-    # Round 2 unioned missing_rows INTO exres with a null ex struct, and the
-    # union defeated nested-schema pruning: every consumer — including the
-    # fetch_log commit that needs only size(ex.lacks) — decoded the FULL ex
-    # struct (all extracted fields + arranged links) off parquet, measured
-    # 725 task-CPU-seconds per wave round in the flog write alone.
+    # Misses stay out of exres: a union with null ex structs would defeat
+    # nested-schema pruning, and every consumer — including the fetch_log
+    # commit that needs only size(ex.lacks) — would decode the FULL ex struct.
     ex = exres.where("valid")
     if ctx.extract_hook is not None:
         ex = ctx.extract_hook(ex)
     failed = (
-        exres.where(~F.col("valid")).select(*slim_cols, "missing")
+        exres.where(~F.col("valid")).select(*_SLIM_COLS, "missing")
         .unionByName(missing_rows)
     )
-    _mark("ex_done")
+    return ex, failed, batch_rows
 
-    # ---------------- B4: discovery (pipeline.save_links:66-222)
+
+def discover(ctx: CrawlContext, rnd: _Round, out: _Outcomes, batch_rows: int):
+    """Discovery (pipeline.save_links:66-222): explode the extracted links,
+    probe the Bloom seen-set, overlay this round's outcomes on url_state and
+    apply the discovery predicate. Stages `pe`; returns (pe, frontier
+    append)."""
+    spark, cat = ctx.spark, ctx.catalog
     links = (
-        ex.select(
+        out.ex.select(
             F.col("url").alias("referer_url"),
             F.col("seq").alias("parent_seq"),
             F.col("version").alias("parent_version"),
@@ -767,35 +831,31 @@ def _run_round_body(ctx: CrawlContext, state: dict | None = None) -> dict:
         )
     )
     cand = (
-        canon.with_url_identity(links, buckets=buckets)
+        canon.with_url_identity(links, buckets=ctx.settings["buckets"])
         .withColumn("host", canon.host_udf(F.col("url")))
         # first-occurrence-wins cross-page dedup, pinned to (pop order, page pos)
         .withColumn("rn", F.row_number().over(
             Window.partitionBy("url_hash").orderBy("parent_seq", "pos")))
         .where("rn = 1").drop("rn")
     )
-    probed = bloom.probe(cand, shards)
-    _mark("probe_done")
-
-    # ONE branch for bloom-positives AND negatives (probe fused into the pe
-    # stage job — the old probed/pe split cost an extra materialization per
-    # round): the url_state left join is a no-op for bloom-negatives (no
-    # false negatives ⇒ negatives are never in url_state), so
-    # coalesce(m_*, s_*) degenerates to the overlay for them — identical to
-    # the old two-branch union. The scale economics are unchanged: the
-    # url_state side is pruned by the runtime bloom filter / bucket
+    probed = bloom.probe(cand, rnd.shards)
+    # ONE branch for bloom-positives AND negatives, with the probe fused into
+    # the pe stage job: the url_state left join is a no-op for
+    # bloom-negatives (no false negatives ⇒ negatives are never in
+    # url_state), so coalesce(m_*, s_*) degenerates to the overlay for them.
+    # The url_state side is pruned by the runtime bloom filter / bucket
     # co-location either way; negatives only ride the small candidate side.
-    mid_upd = _mid_round_overlay(new_sched, ex, failed, denied, round_ts)
+    mid_upd = _mid_round_overlay(*out, rnd.ts)
     # discovery volume is not footer-known until the pe stage lands; size it
     # from the fetched batch with a links-per-page allowance (64), floored so
     # a hub-heavy round still spans the cores. Width stays in effect for the
-    # updates stage below (same discovery-sized data).
-    _set_width(batch_rows * 64,
-               floor=min(_dpar, (batch_rows + 49) // 50))
+    # updates stage in merge (same discovery-sized data).
+    rnd.set_width(batch_rows * 64,
+                  floor=min(rnd.dpar, (batch_rows + 49) // 50))
     pe = cat.stage(
-        spark, round_no, "pe",
+        spark, rnd.no, "pe",
         probed.join(
-            url_state.select(
+            rnd.url_state.select(
                 "url_hash", F.col("status").alias("s_status"),
                 F.col("last").alias("s_last"), F.col("version").alias("s_version"),
             ),
@@ -814,21 +874,19 @@ def _run_round_body(ctx: CrawlContext, state: dict | None = None) -> dict:
         .withColumn(
             "d_requeue",
             F.col("e_status").isNotNull()
-            & _discovery_admit_eff(round_ts),
+            & discovery_admit(rnd.ts, F.col("interval_s"), "e_status", "e_last"),
         ),
     )
-    _mark("pe_done")
 
     # Discovery seq is ARITHMETIC, not a per-rule row_number over every
-    # discovered link (r3: that window sorted the hot rule's whole discovery
-    # wave — 60% of a 1.5M-link round — in ONE task, a core-count-independent
-    # floor). Ordering (parent pop order, then link position on the page) is
-    # preserved by ranking only the DISTINCT PARENT PAGES per rule (hub
-    # pages: orders of magnitude fewer than links) and composing
-    # seq = base + parent_rank·2^14 + pos. pos is capped at 2^14-1 (a page
-    # with >16384 admitted links would tie beyond that — far above any real
-    # page); parent_rank < 2^18 per rule per round keeps the composite
-    # inside the rank-255 stride.
+    # discovered link: that window would sort the hot rule's whole discovery
+    # wave in ONE task, a core-count-independent floor. Ordering (parent pop
+    # order, then link position on the page) is preserved by ranking only the
+    # DISTINCT PARENT PAGES per rule (hub pages: orders of magnitude fewer
+    # than links) and composing seq = base + parent_rank·2^14 + pos. pos is
+    # capped at 2^14-1 (a page with >16384 admitted links would tie beyond
+    # that — far above any real page); parent_rank < 2^18 per rule per round
+    # keeps the composite inside the rank-255 stride.
     adm = pe.where(F.col("d_new") | F.col("d_requeue"))
     parent_rank = (
         adm.select("rule_key", "parent_seq").distinct()
@@ -842,31 +900,40 @@ def _run_round_body(ctx: CrawlContext, state: dict | None = None) -> dict:
         adm.join(parent_rank, ["rule_key", "parent_seq"])
         .withColumn(
             "seq",
-            F.lit(seq_base) + F.lit(DISC_RANK * RANK_STRIDE)
+            F.lit(rnd.seq_base) + F.lit(DISC_RANK * RANK_STRIDE)
             + F.col("_prank") * F.lit(1 << 14)
             + F.least(F.col("pos"), F.lit((1 << 14) - 1)),
         )
         .select("url_hash", "url", "rule_key", "host", "seq",
-                F.lit(round_ts).alias("discovered_ts"), "bucket")
+                F.lit(rnd.ts).alias("discovered_ts"), "bucket")
     )
+    return pe, frontier_append
 
-    # ---------------- C: url_state MERGE (touched buckets only)
+
+def merge(ctx: CrawlContext, rnd: _Round, out: _Outcomes, pe: DataFrame):
+    """url_state MERGE over touched buckets only: this round's schedule,
+    crawl and discovery events, staged as `updates` partitioned by
+    (u_bucket, is_new). Returns (updates, merged url_state rows, the
+    updates stage's partition values)."""
+    spark, cat, st = ctx.spark, ctx.catalog, ctx.settings
+    buckets, round_ts = st["buckets"], rnd.ts
     attempts = st["download_retry"] + 1
-    upd_sched = new_sched.groupBy("url_hash").agg(
+    upd_sched = out.new_sched.groupBy("url_hash").agg(
         F.flatten(F.collect_list(_ev(["schedule"]))).alias("sched_events"),
         F.max("version").alias("version_set"),
         F.max("is_seed").alias("was_seed"),
     )
     upd_crawl = (
-        ex.select("url_hash", _ev(["crawling", "crawled_finish"]).alias("crawl_events"))
+        out.ex.select("url_hash", _ev(["crawling", "crawled_finish"]).alias("crawl_events"))
         .unionByName(
-            failed.select(
+            out.failed.select(
                 "url_hash",
                 _ring3(F.concat(F.array_repeat(F.lit("crawling"), attempts),
                                 _ev(["crawled_failure"]))).alias("crawl_events"),
             )
         )
-        .unionByName(denied.select("url_hash", _ev(["crawled_failure"]).alias("crawl_events")))
+        .unionByName(out.denied.select("url_hash",
+                                       _ev(["crawled_failure"]).alias("crawl_events")))
         .groupBy("url_hash")
         .agg(F.flatten(F.collect_list("crawl_events")).alias("crawl_events"))
     )
@@ -885,8 +952,8 @@ def _run_round_body(ctx: CrawlContext, state: dict | None = None) -> dict:
         "bucket",
     )
     seed_new = (
-        new_sched.where("is_seed")
-        .join(url_state.select("url_hash"), "url_hash", "left_anti")
+        out.new_sched.where("is_seed")
+        .join(rnd.url_state.select("url_hash"), "url_hash", "left_anti")
         .select(
             "url_hash", "url", "rule_key",
             F.lit("").alias("n_referer"), F.lit("schedule").alias("n_status"),
@@ -895,10 +962,9 @@ def _run_round_body(ctx: CrawlContext, state: dict | None = None) -> dict:
         )
         .withColumn("bucket", canon.bucket_of_hash(buckets))
     )
-    # all_new stays UNSTAGED (r1 had a dedicated stage job): it derives from
-    # already-staged pe/new_sched, and its only consumers are the updates
-    # stage below (joined in) and the bloom update (re-derived from the
-    # staged updates via is_new)
+    # all_new stays UNSTAGED: it derives from already-staged pe/new_sched,
+    # and its only consumers are the updates stage below (joined in) and the
+    # bloom update (re-derived from the staged updates via is_new)
     all_new = disc_new.unionByName(seed_new).dropDuplicates(["url_hash"])
 
     updates = (
@@ -927,15 +993,14 @@ def _run_round_body(ctx: CrawlContext, state: dict | None = None) -> dict:
     )
     # consumed by the merge write AND the bloom update; partitioned by
     # (u_bucket, is_new) so the touched-bucket and bloom-touched sets read
-    # off the stage's directory names — replaces two distinct().collect()
-    # jobs per round with a driver-side listdir
-    updates = cat.stage(spark, round_no, "updates", updates,
+    # off the stage's directory names (a driver-side listdir, not two
+    # distinct().collect() jobs)
+    updates = cat.stage(spark, rnd.no, "updates", updates,
                         partition_by=["u_bucket", "is_new"])
-    parts = cat.stage_partition_values(round_no, "updates")
+    parts = cat.stage_partition_values(rnd.no, "updates")
     touched_buckets = sorted({int(p["u_bucket"]) for p in parts})
-    _mark("updates_done")
     merged = (
-        url_state.where(
+        rnd.url_state.where(
             F.col("bucket").isin(touched_buckets) if touched_buckets else F.lit(False)
         )
         .alias("s")
@@ -965,20 +1030,66 @@ def _run_round_body(ctx: CrawlContext, state: dict | None = None) -> dict:
             F.coalesce("s.bucket", "u.u_bucket").alias("bucket"),
         )
     )
+    return updates, merged, parts
 
-    # ---------------- D: sinks + commits
+
+def _crawled_frame(ctx: CrawlContext, rnd: _Round, ex: DataFrame) -> DataFrame:
+    spark = ctx.spark
     crawled = ex.where(F.col("rule_type") == "node").select(
         "url_hash", "url", "rule_key", "referer",
-        F.lit(round_ts).alias("fetched_ts"), F.lit(round_no).alias("round"),
+        F.lit(rnd.ts).alias("fetched_ts"), F.lit(rnd.no).alias("round"),
         F.col("page_content").alias("content"),
         F.col("ex.extracted").alias("extracted"),
         F.col("ex.children").alias("extracted_children"),
         F.col("ex.drill_relation").alias("drill_relation"),
-    ) if st["save_content"] else schema.local_df(spark, [], schema.CRAWLED)
+    ) if ctx.settings["save_content"] else schema.local_df(spark, [], schema.CRAWLED)
     if ctx.pipeline_hook is not None:
-        crawled = ctx.pipeline_hook(crawled, cat, round_no)
+        crawled = ctx.pipeline_hook(crawled, ctx.catalog, rnd.no)
         if crawled is None:  # hook did its own sink; keep round records consistent
             crawled = schema.local_df(spark, [], schema.CRAWLED)
+    return crawled
+
+
+def _fetch_log_frame(rnd: _Round, out: _Outcomes) -> DataFrame:
+    """fetch_log rows partitioned-by copies (p_status, p_domain). flog
+    derives only from staged parquet (exres/denied): the fetch_log commit
+    re-reads a few slim columns, no persist. The metrics rollup (count per
+    domain×status) and the round's fetched/failed/denied counters are not
+    separate jobs: each count is the row total of its partition's parquet
+    footers, already scanned into the manifest, and the metrics table
+    commit is a driver-side pyarrow write of O(domains×statuses) rows
+    (_commit_metrics_from_flog). p_* are COPIES (hive strips partition cols
+    from the physical files; readers use the manifest's explicit file list,
+    which does no partition discovery)."""
+    def rows(df, status, reason):
+        return df.select(
+            F.lit(rnd.no).alias("round"), "seq", "url_hash", "url", "host",
+            F.lit(status).alias("status"), reason.alias("reason"),
+            F.lit(rnd.ts).alias("ts"),
+        )
+
+    flog = (
+        rows(out.ex, "fetched", F.when(F.size("ex.lacks") > 0, F.lit("data_lack")))
+        .unionByName(rows(out.failed, "failed",
+                          F.when(F.col("missing"), "missing").otherwise("invalid_content")))
+        .unionByName(rows(out.denied, "robots_denied", F.lit("robots")))
+    )
+    return (
+        flog
+        .withColumn("p_status", F.col("status"))
+        .withColumn("p_domain", F.coalesce(_domain_expr(), F.lit("")))
+    )
+
+
+def commit(ctx: CrawlContext, rnd: _Round, out: _Outcomes,
+           frontier_append: DataFrame, updates: DataFrame, merged: DataFrame,
+           parts: list[dict], batch_rows: int):
+    """Sinks and table commits (a COMMIT_WORKERS-wide pool), then the
+    footer-derived metrics. Atomicity: the round record that run_round
+    writes afterwards is the only commit point readers trust for resume.
+    Returns (snapshot ids, round metrics)."""
+    spark, cat, st, round_no = ctx.spark, ctx.catalog, ctx.settings, rnd.no
+    crawled = _crawled_frame(ctx, rnd, out.ex)
     # $category routing (pipeline.js:275: extracted_data['$category'] redirects
     # the HBase table). Category values are rule config, not data — derived
     # from ctx.rules with no job; rows with a declared category land in
@@ -992,8 +1103,7 @@ def _run_round_body(ctx: CrawlContext, state: dict | None = None) -> dict:
     cat_col = F.element_at(F.col("extracted"), "$category")
     # With categories configured, ALL crawled tables commit from ONE write:
     # the content frame is staged partitioned by routed category (no
-    # reshuffle) and each table adopts its partition's files driver-side —
-    # r2 ran one append job per category table per round.
+    # reshuffle) and each table adopts its partition's files driver-side.
     cat_snaps: dict[str, int] = {}
     # footer-known emptiness (no jobs): a round with no extraction output
     # and no denials appends NOTHING to the content/log tables — skip those
@@ -1004,70 +1114,23 @@ def _run_round_body(ctx: CrawlContext, state: dict | None = None) -> dict:
 
     def _commit_crawled():
         if ex_rows == 0 and ctx.pipeline_hook is None:
-            for c in categories:
-                cat_snaps[f"crawled_{c}"] = cat.commit_files(
-                    f"crawled_{c}", [], mode="append", round_no=round_no)
-            return cat.commit_files("crawled", [], mode="append", round_no=round_no)
-        if not categories:
+            files = {c: [] for c in [*categories, "__base__"]}
+        elif not categories:
             return cat.commit("crawled", crawled, mode="append", round_no=round_no)
-        routed = F.when(cat_col.isin(categories), cat_col).otherwise(F.lit("__base__"))
-        cat.stage(spark, round_no, "crawled_out",
-                  crawled.withColumn("p_cat", routed),
-                  partition_by=["p_cat"], shuffle=False)
+        else:
+            routed = F.when(cat_col.isin(categories), cat_col).otherwise(F.lit("__base__"))
+            cat.stage(spark, round_no, "crawled_out",
+                      crawled.withColumn("p_cat", routed),
+                      partition_by=["p_cat"], shuffle=False)
+            files = {c: cat.stage_partition_files(round_no, "crawled_out", p_cat=c)
+                     for c in [*categories, "__base__"]}
         for c in categories:
             cat_snaps[f"crawled_{c}"] = cat.commit_files(
-                f"crawled_{c}",
-                cat.stage_partition_files(round_no, "crawled_out", p_cat=c),
-                mode="append", round_no=round_no,
-            )
-        return cat.commit_files(
-            "crawled",
-            cat.stage_partition_files(round_no, "crawled_out", p_cat="__base__"),
-            mode="append", round_no=round_no,
-        )
+                f"crawled_{c}", files[c], mode="append", round_no=round_no)
+        return cat.commit_files("crawled", files["__base__"], mode="append",
+                                round_no=round_no)
 
-    flog = (
-        ex.select(
-            F.lit(round_no).alias("round"), "seq", "url_hash", "url", "host",
-            F.lit("fetched").alias("status"),
-            F.when(F.size("ex.lacks") > 0, F.lit("data_lack")).alias("reason"),
-            F.lit(round_ts).alias("ts"),
-        )
-        .unionByName(
-            failed.select(
-                F.lit(round_no).alias("round"), "seq", "url_hash", "url", "host",
-                F.lit("failed").alias("status"),
-                F.when(F.col("missing"), "missing")
-                .otherwise("invalid_content").alias("reason"),
-                F.lit(round_ts).alias("ts"),
-            )
-        )
-        .unionByName(
-            denied.select(
-                F.lit(round_no).alias("round"), "seq", "url_hash", "url", "host",
-                F.lit("robots_denied").alias("status"),
-                F.lit("robots").alias("reason"), F.lit(round_ts).alias("ts"),
-            )
-        )
-    )
-    # flog derives only from staged parquet (exres/denied) — the fetch_log
-    # commit re-reads a few slim columns, no persist.
-    # The metrics rollup (count per domain×status) and the round's
-    # fetched/failed/denied counters are NOT separate jobs (r2 ran a groupBy
-    # job + a write + an Observation): the fetch_log commit below writes
-    # partitioned by (p_status, p_domain), so every count is the row total
-    # of its partition's parquet footers — already scanned into the
-    # manifest. The metrics table commit collapses to a driver-side pyarrow
-    # write of O(domains×statuses) rows (_commit_metrics_from_flog after the
-    # commit pool). p_* are COPIES (hive strips partition cols from the
-    # physical files; readers use the manifest's explicit file list, which
-    # does no partition discovery).
-    flog_partitioned = (
-        flog
-        .withColumn("p_status", F.col("status"))
-        .withColumn("p_domain", F.coalesce(_domain_expr(), F.lit("")))
-    )
-
+    flog_partitioned = _fetch_log_frame(rnd, out)
     # bloom's replaced-partition set is ONLY buckets holding new hashes —
     # url_state may touch more buckets (status-only updates) whose shards
     # must carry over untouched. new_hashes re-reads the staged updates
@@ -1075,10 +1138,10 @@ def _run_round_body(ctx: CrawlContext, state: dict | None = None) -> dict:
     new_hashes = updates.where("is_new = 1").select(
         "url_hash", F.col("u_bucket").cast("int").alias("bucket")
     )
-    shards_new = bloom.update_shards(spark, shards, new_hashes, st["bloom_keys_per_bucket"])
+    shards_new = bloom.update_shards(spark, rnd.shards, new_hashes,
+                                     st["bloom_keys_per_bucket"])
+    touched_buckets = sorted({int(p["u_bucket"]) for p in parts})
     bloom_touched = sorted({int(p["u_bucket"]) for p in parts if int(p["is_new"]) == 1})
-
-    frontier_cols = [f.name for f in schema.FRONTIER.fields]
 
     def _commit_frontier():
         # surviving (unpopped) frontier rows: ADOPT the fr2 stage's
@@ -1086,9 +1149,7 @@ def _run_round_body(ctx: CrawlContext, state: dict | None = None) -> dict:
         # hardlink + footer scan — the extra working columns in those files
         # are invisible through the FRONTIER-schema read), then APPEND this
         # round's discoveries as the only Spark write — skipped outright
-        # when the pe stage is footer-known empty (no discovery). Prod keeps
-        # the same shape with consumed-interval metadata instead of the
-        # adopt-overwrite.
+        # when the pe stage is footer-known empty (no discovery).
         snap = cat.commit_files(
             "frontier",
             cat.stage_partition_files(round_no, "fr2", popped="false"),
@@ -1097,17 +1158,9 @@ def _run_round_body(ctx: CrawlContext, state: dict | None = None) -> dict:
         if cat.stage_rows(round_no, "pe") == 0:
             return snap
         return cat.commit(
-            "frontier", frontier_append.select(*frontier_cols),
+            "frontier", frontier_append.select(*schema.FRONTIER.fieldNames()),
             mode="append", round_no=round_no,
         )
-    # Commits run SEQUENTIALLY by default: measured at local[32], 7 concurrent
-    # py4j write jobs stall each other 8-20x (driver/scheduler contention —
-    # round-2 commits 47-119s concurrent vs 10s sequential; each write alone
-    # is <3s). Each write is already wide, so concurrency buys nothing here;
-    # a real multi-executor cluster can flip concurrent_commits=True.
-    # Atomicity is unchanged: the round record below is still the only commit
-    # point readers trust for resume.
-    from concurrent.futures import ThreadPoolExecutor
 
     commit_plan = {
         "frontier": _commit_frontier,
@@ -1128,10 +1181,9 @@ def _run_round_body(ctx: CrawlContext, state: dict | None = None) -> dict:
                 replaced_partitions={"pbucket": touched_buckets},
                 # split hot buckets across files only once buckets are big
                 # enough for writer parallelism to matter — at small state
-                # the extra files just cost footer scans (measured
-                # +1-2s/commit)
+                # the extra files just cost footer scans (+1-2 s/commit)
                 split_col="url_hash",
-                files_per_partition=4 if _state_rows > 2_000_000 else 1,
+                files_per_partition=4 if rnd.state_rows > 2_000_000 else 1,
             )
         ),
         "bloom": lambda: (
@@ -1152,112 +1204,51 @@ def _run_round_body(ctx: CrawlContext, state: dict | None = None) -> dict:
                 partition_by=["p_status", "p_domain"],
                 # status×domain is ~8 values — without the salt a WAVE's
                 # flog repartition collapses to 8 writer tasks at ANY core
-                # count (measured 1.8x 4→16); footer-derived metrics sum rows
-                # across a partition's files. Small rounds skip the salt —
-                # there the extra files are pure footer-scan overhead.
+                # count (1.8x slower at 16 cores than at 4); footer-derived
+                # metrics sum rows across a partition's files. Small rounds
+                # skip the salt — there the extra files are pure footer-scan
+                # overhead.
                 split_col="url_hash",
                 files_per_partition=(
-                    max(4, spark.sparkContext.defaultParallelism // 4)
-                    if batch_rows > 100_000 else 1
+                    max(4, rnd.dpar // 4) if batch_rows > 100_000 else 1
                 ),
             )
         ),
     }
-    _mark("pre_commit")
 
     def _timed(fn):
-        t0 = _time.time()
+        t0 = time.time()
         s = fn()
-        return s, round(_time.time() - t0, 2)
+        return s, round(time.time() - t0, 2)
 
     # one width for the whole commit pool (conf is session-shared; concurrent
     # commit threads must not race it): dominated by the url_state MERGE
     # (state rows + this round's updates) and the fetch_log wave append.
-    # Capped at ONE wave of cores: with concurrent_commits, 6 jobs x 2-cores
-    # width queue ~12x cores tasks at once — the same driver/scheduler
-    # contention measured for concurrent commits at local[32].
-    # FLOORED at the touched-bucket count (guide §2.5 — data-derived, not
-    # core-derived): the 50k-rows/task width model undersizes the url_state
-    # merge, whose rows carry records/events arrays — measured: a 48k-row
-    # round-4 merge at width 1 ran ONE 3.75s task writing all 16 bucket
-    # dirs; width 16 puts each bucket's merge+write in its own task.
-    _set_width(_state_rows + cat.stage_rows(round_no, "updates") + batch_rows,
-               floor=min(_dpar, max(1, len(touched_buckets))), cap=_dpar)
-    # Default width 2 (guide §2.6): enough overlap that one commit's driver-
-    # side tail (footer scans, manifest writes) back-fills with the next
-    # commit's compute, without re-creating the r2 regression (6-7 concurrent
-    # py4j write jobs stalling each other 8-20x at local[32]).
-    # concurrent_commits=True keeps the all-parallel pool for real clusters.
-    n_workers = max(1, len(commit_plan) if st.get("concurrent_commits", False)
-                    else min(len(commit_plan), int(st.get("commit_workers", 2))))
-    with ThreadPoolExecutor(max_workers=n_workers) as pool:
+    # Capped at ONE wave of cores so the pool's concurrent jobs do not queue
+    # several waves of tasks at once. FLOORED at the touched-bucket count
+    # (guide §2.5 — data-derived, not core-derived): the 50k-rows/task width
+    # model undersizes the url_state merge, whose rows carry records/events
+    # arrays — a 48k-row merge at width 1 runs ONE task writing every bucket
+    # dir; at bucket width each bucket's merge+write gets its own task.
+    rnd.set_width(rnd.state_rows + cat.stage_rows(round_no, "updates") + batch_rows,
+                  floor=min(rnd.dpar, max(1, len(touched_buckets))), cap=rnd.dpar)
+    with ThreadPoolExecutor(max_workers=COMMIT_WORKERS) as pool:
         futures = {name: pool.submit(_timed, fn) for name, fn in commit_plan.items()}
         res = {name: fut.result() for name, fut in futures.items()}
     snaps = {name: r[0] for name, r in res.items()}
     snaps.update(cat_snaps)  # category tables committed inside _commit_crawled
-    commit_s = {name: r[1] for name, r in res.items()}
     # metrics = footer rollup of the fetch_log commit just made — no Spark job
-    snaps["metrics"], status_counts = _commit_metrics_from_flog(cat, round_no, round_ts)
-    _mark("commits_done")
-
-    round_metrics = {
+    snaps["metrics"], status_counts = _commit_metrics_from_flog(cat, round_no, rnd.ts)
+    return snaps, {
         "round": round_no,
-        "round_ts": round_ts,
+        "round_ts": rnd.ts,
         "fetched": status_counts.get("fetched", 0),
         "failed": status_counts.get("failed", 0),
         "denied": status_counts.get("robots_denied", 0),
-        "scheduled_backlog": backlog,
-        "balance": balance,
-        "popped_intervals": {
-            r["rule_key"]: [int(r["lo"]), int(r["hi"])] for r in popped_bounds
-        },
-        "commit_s": commit_s,
+        "scheduled_backlog": rnd.backlog,
+        "balance": rnd.balance,
+        "commit_s": {name: r[1] for name, r in res.items()},
     }
-    new_state = {
-        "round": round_no,
-        "first_schedule": first_sched,
-        # consumed rows are physically dropped by the frontier rewrite above;
-        # in append-only mode this would accumulate popped_intervals instead
-        "consumed": {},
-        # the committed frontier now holds ONLY entries written under the
-        # current rule set (repair ran this round if it was needed), so the
-        # signature history collapses to the live one
-        "rules_sigs": [rules_sig],
-        # per-rule id_parameter signatures: next round re-canonicalizes the
-        # frontier slice of any rule whose signature changed (transformLink)
-        "id_sigs": id_sigs,
-    }
-    _mark("bloom_counts_done")
-    keys = list(_t.keys())
-    round_metrics["phase_s"] = {
-        keys[i]: round(_t[keys[i]] - _t[keys[i - 1]], 2) for i in range(1, len(keys))
-    }
-    cat.commit_round(round_no, snaps, {"state": new_state, "round_metrics": round_metrics})
-    # this round's stages are dead once the round record is committed (resume
-    # replays from committed snapshots, never from stages); sweep the
-    # previous round's too in case an earlier run crashed mid-round
-    cat.drop_stages(round_no)
-    if round_no > 1:
-        cat.drop_stages(round_no - 1)
-    if ctx.alert_hook is not None:
-        ctx.alert_hook(round_no, round_metrics)
-    breaker = st.get("failure_breaker")
-    if breaker is not None:
-        n_bad = round_metrics["failed"] + round_metrics["denied"]
-        if n_bad >= breaker:
-            raise CircuitBreakerTripped(
-                f"round {round_no}: {n_bad} failures >= breaker {breaker}"
-            )
-    return new_state
-
-
-def _rank_expr(ctx: CrawlContext):
-    if not ctx.rank:
-        return F.lit(0).cast("long")
-    return F.coalesce(
-        *[F.when(F.col("rule_key") == k, F.lit(v)) for k, v in ctx.rank.items()],
-        F.lit(DISC_RANK),
-    ).cast("long")
 
 
 def _mid_round_overlay(new_sched, ex, failed, denied, round_ts: int):
@@ -1284,19 +1275,6 @@ def _mid_round_overlay(new_sched, ex, failed, denied, round_ts: int):
     )
 
 
-def _discovery_admit_eff(round_ts_ms: int):
-    """discovery_admit over the effective (e_*) state columns."""
-    from ..operators.scheduler import TEN_MIN_MS, TWO_DAYS_MS
-
-    real_interval = (
-        F.when(F.col("e_status").isin("crawling", "schedule"), F.lit(TEN_MIN_MS))
-        .when(F.col("e_status") == "hit", F.lit(TWO_DAYS_MS))
-        .otherwise(F.col("interval_s").cast("long") * 1000)
-    )
-    window_ok = (F.lit(round_ts_ms) - F.coalesce(F.col("e_last"), F.lit(0))) >= real_interval
-    return (F.col("e_status") == "crawled_failure") | window_ok
-
-
 def _merge_version():
     """version precedence: seed set (schedule_version) → discovery bump (only
     upward, pipeline.js:159-166) → stored/creation."""
@@ -1315,8 +1293,7 @@ def _commit_metrics_from_flog(cat: Catalog, round_no: int, round_ts: int
     fetch_log commit's manifest: the write was partitioned by (p_status,
     p_domain), so each partition's row total — already footer-scanned into
     the manifest — IS the metric value. Appends the O(domains×statuses)-row
-    result via the catalog's driver-side pyarrow path: zero Spark jobs where
-    round 2 ran a full groupBy job + write + an Observation per round.
+    result via the catalog's driver-side pyarrow path: zero Spark jobs.
     Returns (metrics snapshot, per-status totals) — the totals also feed the
     round record's fetched/failed/denied counters."""
     import os as _os

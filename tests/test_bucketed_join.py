@@ -6,6 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from neocrawler_spark import schema, synth
+from neocrawler_spark.plans import round as round_mod
 from neocrawler_spark.plans.round import CrawlContext
 from neocrawler_spark.rules import load_rules
 from neocrawler_spark.sources.bucketed import write_bucketed_pages
@@ -41,9 +42,11 @@ def test_no_exchange_on_pages_side(spark, tmp_path):
 
 
 @pytest.mark.slow
-def test_bucketed_crawl_bit_identical(spark, tmp_path):
+def test_bucketed_crawl_bit_identical(spark, tmp_path, monkeypatch):
     """Same 2-round crawl over plain-parquet pages vs the bucketed corpus:
     fetch_log must match row-for-row (the join change is pure physics)."""
+    # force the SHUFFLE_HASH/bucketed branch
+    monkeypatch.setattr(round_mod, "FETCH_BROADCAST_LIMIT", 1)
     rules = load_rules(synth.gen_rules(PARAMS))
     pages_plain = synth.gen_pages_df(spark, PARAMS)
     pages_plain.write.mode("overwrite").parquet(str(tmp_path / "plain"))
@@ -52,9 +55,7 @@ def test_bucketed_crawl_bit_identical(spark, tmp_path):
         cat = Catalog(tmp_path / sub)
         ctx = CrawlContext(spark, cat, rules, pages,
                            synth.gen_robots_df(spark, PARAMS),
-                           settings={"buckets": 4, "bloom_keys_per_bucket": 200,
-                                     # force the SHUFFLE_HASH/bucketed branch
-                                     "fetch_broadcast_limit": 1})
+                           settings={"buckets": 4, "bloom_keys_per_bucket": 200})
         run_rounds(ctx, 2)
         return sorted(
             (r["round"], r["seq"], r["url"], r["status"], r["reason"])

@@ -58,6 +58,11 @@ def test_crawl_progresses(crawled_ctx):
     assert metrics[0]["fetched"] >= 2  # round 1: the two home seeds (+ macro seeds)
     total_fetched = sum(m["fetched"] for m in metrics)
     assert total_fetched > 10
+    phases = {"admit", "gate", "fetch_extract", "discover", "merge", "commit"}
+    for m in metrics:
+        assert set(m["phase_s"]) == phases
+        assert all(v >= 0 for v in m["phase_s"].values())
+        assert sum(m["phase_s"].values()) <= m["wall_s"]
     crawled = table(ctx, "crawled_weixin", schema.CRAWLED)  # $category routing
     assert crawled.count() > 0
 

@@ -60,7 +60,8 @@ def test_consume_quota_pops_past_rejected(spark):
     after the 2nd admit (seq 3); the rejected seq 2 is still consumed."""
     rows = [("r", i, i % 2 == 1) for i in range(1, 6)]  # seq 1..5
     df = spark.createDataFrame(rows, "rule_key string, seq long, admit boolean")
-    out = consume_quota(df, {"r": 2}, set()).orderBy("seq").collect()
+    ct = spark.createDataFrame([("r", 2)], "rule_key string, ct long")
+    out = consume_quota(df, ct, set()).orderBy("seq").collect()
     assert [r["popped"] for r in out] == [True, True, True, False, False]
     assert [r["sched"] for r in out] == [True, False, True, False, False]
 
@@ -68,7 +69,8 @@ def test_consume_quota_pops_past_rejected(spark):
 def test_consume_quota_lifo(spark):
     rows = [("r", i, True) for i in range(1, 6)]
     df = spark.createDataFrame(rows, "rule_key string, seq long, admit boolean")
-    out = consume_quota(df, {"r": 2}, {"r"}).orderBy("seq").collect()
+    ct = spark.createDataFrame([("r", 2)], "rule_key string, ct long")
+    out = consume_quota(df, ct, {"r"}).orderBy("seq").collect()
     # LIFO pops highest seq first
     assert [r["sched"] for r in out] == [False, False, False, True, True]
 
