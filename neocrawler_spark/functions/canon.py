@@ -175,10 +175,7 @@ def with_url_identity(df, url_col: str = "url", buckets: int = 4096):
     mod buckets — cheap, uniform, and computable from the hash alone so both
     sides of any state join bucket identically."""
     return df.withColumn("url_hash", F.md5(F.col(url_col))).withColumn(
-        "bucket",
-        (F.conv(F.substring("url_hash", 1, 3), 16, 10).cast("int") % F.lit(buckets)).cast(
-            "int"
-        ),
+        "bucket", bucket_of_hash(buckets)
     )
 
 

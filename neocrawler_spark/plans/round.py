@@ -1100,7 +1100,9 @@ def commit(ctx: CrawlContext, rnd: _Round, out: _Outcomes,
         c for r in ctx.rules if r["type"] == "node"
         for c in [(r.get("extract_rule") or {}).get("category")] if c
     })
-    cat_col = F.element_at(F.col("extracted"), "$category")
+    # try_element_at: a row without $category is NULL (→ base table) on any
+    # Spark version; element_at raises on a missing key under ANSI on 3.x
+    cat_col = F.try_element_at(F.col("extracted"), F.lit("$category"))
     # With categories configured, ALL crawled tables commit from ONE write:
     # the content frame is staged partitioned by routed category (no
     # reshuffle) and each table adopts its partition's files driver-side.

@@ -13,7 +13,8 @@ from collections import defaultdict
 
 def parse_evlog(path):
     """Parse a Spark event log (file or rolling dir) into per-stage rows with
-    task metrics. Importable (bench.py records per-run totals from this)."""
+    task metrics. Importable (perfbench/trace.py sums these rows into per-job
+    task metrics)."""
     import glob
     import io
     import os
