@@ -30,7 +30,7 @@ from urllib.parse import parse_qsl, quote, urljoin, urlsplit, urlunsplit
 import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import ArrayType, StringType
+from pyspark.sql.types import StringType
 
 # ----------------------------------------------------------------- pure python
 
@@ -144,11 +144,6 @@ def host_udf(urls: pd.Series) -> pd.Series:
 @pandas_udf(StringType())
 def domain_udf(urls: pd.Series) -> pd.Series:
     return urls.map(lambda u: url_domain(u) if isinstance(u, str) else None)
-
-
-@pandas_udf(ArrayType(StringType()))
-def expand_seed_udf(seeds: pd.Series) -> pd.Series:
-    return seeds.map(lambda s: expand_seed(s) if isinstance(s, str) else [])
 
 
 def canonicalize_udf(id_param_by_rule: dict[str, list[str] | None]):

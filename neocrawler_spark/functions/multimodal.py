@@ -24,26 +24,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-MEDIA_META_SCHEMA = (
-    "media_id string, n_bytes long, magic string, media_kind string, sha1 string"
-)
 FEATURE_SCHEMA = "media_id string, feature array<float>, decoder string"
-
-_MAGIC = {
-    b"\xff\xd8\xff": "image/jpeg",
-    b"\x89PNG": "image/png",
-    b"GIF8": "image/gif",
-    b"RIFF": "audio/wav-or-avi",
-    b"ID3": "audio/mp3",
-    b"\x00\x00\x00": "video/mp4-ish",
-}
-
-
-def sniff_kind(head: bytes) -> str:
-    for magic, kind in _MAGIC.items():
-        if head.startswith(magic):
-            return kind
-    return "application/octet-stream"
 
 
 def media_metadata(df: DataFrame, id_col: str, bin_col: str) -> DataFrame:

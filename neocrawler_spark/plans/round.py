@@ -147,19 +147,6 @@ class CircuitBreakerTripped(RuntimeError):
 
 
 @dataclass
-class SpiderExtend:
-    """Instance extension bundle — the spider_extend.js module object
-    (spider/index.js:69-77 loads {download, extract, pipeline} middlewares
-    from the instance dir). Pass via settings={"spider_extend": ...}; hooks
-    set directly on CrawlContext win over the bundle's."""
-
-    download_hook: "object" = None
-    extract_hook: "object" = None
-    pipeline_hook: "object" = None
-    alert_hook: "object" = None
-
-
-@dataclass
 class CrawlContext:
     spark: SparkSession
     catalog: Catalog
@@ -196,12 +183,6 @@ class CrawlContext:
 
     def __post_init__(self):
         self.settings = {**DEFAULT_SETTINGS, **self.settings}
-        ext = self.settings.pop("spider_extend", None)
-        if ext is not None:  # assembly init (spider/index.js:69-77)
-            for h in ("download_hook", "extract_hook", "pipeline_hook",
-                      "alert_hook"):
-                if getattr(self, h) is None:
-                    setattr(self, h, getattr(ext, h, None))
         self.by_key = rules_by_key(self.rules)
         self.by_domain = rules_by_domain(self.rules)
         ranked = sorted(self.rules, key=lambda r: -r["rate"])
@@ -1298,25 +1279,9 @@ def _commit_metrics_from_flog(cat: Catalog, round_no: int, round_ts: int
     result via the catalog's driver-side pyarrow path: zero Spark jobs.
     Returns (metrics snapshot, per-status totals) — the totals also feed the
     round record's fetched/failed/denied counters."""
-    import os as _os
-    from urllib.parse import unquote
-
-    man = cat.manifest("fetch_log")
-    snap_tok = f"snap-{man['snapshot']:012d}"
     agg: dict[tuple, int] = {}
-    for f in man["files"]:
-        parts = f["path"].split(_os.sep)
-        if snap_tok not in parts:
-            continue  # parent files from earlier rounds
-        status = domain = None
-        for p in parts:
-            if p.startswith("p_status="):
-                status = unquote(p[len("p_status="):])
-            elif p.startswith("p_domain="):
-                v = p[len("p_domain="):]
-                # hive writes null/empty partition values as the default token
-                domain = None if v == "__HIVE_DEFAULT_PARTITION__" else unquote(v)
-        key = (domain, status)
+    for f in cat.new_files("fetch_log"):
+        key = (f["partition"].get("p_domain"), f["partition"].get("p_status"))
         agg[key] = agg.get(key, 0) + f["rows"]
     rows = [
         (round_no, _yyyymmdd(round_ts), d, s, n)

@@ -158,12 +158,6 @@ ROBOTS = T.StructType(
     ]
 )
 
-# Number of hash buckets for frontier/url_state partitioning. At 10^10 URLs
-# with ~100B/row of state this is ~1TB of state; 4096 buckets → ~250MB per
-# bucket file group, merge rewrites touch only dirty buckets. Tests override.
-DEFAULT_BUCKETS = 4096
-
-
 def local_df(spark, rows, schema):
     """Driver-built config frame as ONE slice. Plain createDataFrame
     parallelizes into defaultParallelism pickled partitions, so every

@@ -103,9 +103,4 @@ def get_spark(
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
-    # ad-hoc experiment overrides, e.g.
-    # NCS_SPARK_CONF="spark.sql.codegen.wholeStage=false;spark.foo=bar"
-    for kv in filter(None, os.environ.get("NCS_SPARK_CONF", "").split(";")):
-        k, _, v = kv.partition("=")
-        builder = builder.config(k.strip(), v.strip())
     return builder.getOrCreate()

@@ -6,7 +6,7 @@ this module implements the same *contract* with plain Parquet:
 
 * a table = a directory of immutable snapshot file-sets
 * a manifest per snapshot: file list with per-file rows/bytes, parent
-  snapshot id (lineage), free-form metrics
+  snapshot id (lineage), write/scan timings
 * commit = write-files → write-manifest → atomic rename of the CURRENT
   pointer (readers only ever follow CURRENT, so a crash mid-commit leaves the
   previous snapshot intact — the resume guarantee)
@@ -14,26 +14,63 @@ this module implements the same *contract* with plain Parquet:
 * reads go through the manifest's explicit file list, so time-travel /
   rollback is `set_current(name, snap)`
 
-Swap-in path for a real cluster: replace Catalog with an Iceberg catalog —
-every call site uses only read / commit / current_snapshot.
+All commits share one private path (`Catalog._snapshot`); the public writers
+only fill the new snapshot's directory. Only this module knows the file
+layout: callers get partition values from `new_files` and the `stage_*`
+methods. Swap-in path for a real cluster: an Iceberg catalog.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 import uuid
+from concurrent.futures import ThreadPoolExecutor
 from pathlib import Path
+from urllib.parse import unquote
 
+import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as _fn
 from pyspark.sql import types as T
 
+# the directory value Spark writes for a null or empty partition value
+_HIVE_DEFAULT_PARTITION = "__HIVE_DEFAULT_PARTITION__"
+_ARROW = {"integer": pa.int32(), "long": pa.int64(), "string": pa.string(),
+          "double": pa.float64(), "boolean": pa.bool_()}
 
-def _fcol(name: str):
-    return _fn.col(name)
+
+def _hive_partition(path: str | Path, base: str | Path) -> dict:
+    """Partition values of a data file under `base` in hive layout: its
+    `col=value` directory segments below `base`, with Spark's escaping
+    undone and the default-partition token read as None."""
+    out = {}
+    for seg in Path(path).relative_to(base).parts[:-1]:
+        col, eq, val = seg.partition("=")
+        if eq:
+            out[col] = None if val == _HIVE_DEFAULT_PARTITION else unquote(val)
+    return out
+
+
+def _scan_paths(paths: list[Path]) -> list[dict]:
+    """Footer scan: rows and bytes of each parquet file."""
+    def one(p: Path) -> dict:
+        meta = pq.ParquetFile(p).metadata
+        return {"path": str(p), "rows": meta.num_rows, "bytes": p.stat().st_size}
+
+    if len(paths) <= 4:
+        return [one(p) for p in paths]
+    with ThreadPoolExecutor(max_workers=16) as pool:
+        return list(pool.map(one, paths))
+
+
+def _atomic_write(path: Path, text: str) -> None:
+    tmp = path.with_suffix(f".tmp-{uuid.uuid4().hex}")
+    tmp.write_text(text)
+    os.replace(tmp, path)
 
 
 class Catalog:
@@ -51,19 +88,17 @@ class Catalog:
     def _current_path(self, name: str) -> Path:
         return self._tdir(name) / "CURRENT"
 
+    def _stage_dir(self, round_no: int, *name: str) -> Path:
+        return Path(self.root, "_stages", f"r{round_no:08d}", *name)
+
     # ----------------------------------------------------------- snapshots
     def current_snapshot(self, name: str) -> int | None:
         p = self._current_path(name)
-        if not p.exists():
-            return None
-        return int(p.read_text().strip())
+        return int(p.read_text().strip()) if p.exists() else None
 
     def set_current(self, name: str, snap: int) -> None:
         """Atomic pointer swap (rollback / resume)."""
-        p = self._current_path(name)
-        tmp = p.with_suffix(f".tmp-{uuid.uuid4().hex}")
-        tmp.write_text(str(snap))
-        os.replace(tmp, p)
+        _atomic_write(self._current_path(name), str(snap))
 
     def manifest(self, name: str, snap: int | None = None) -> dict | None:
         if snap is None:
@@ -73,22 +108,74 @@ class Catalog:
         mp = self._manifest_path(name, snap)
         return json.loads(mp.read_text()) if mp.exists() else None
 
+    def new_files(self, name: str) -> list[dict]:
+        """The files the current snapshot of `name` added, each with its
+        hive partition values under "partition" ({} when unpartitioned)."""
+        m = self.manifest(name)
+        if m is None:
+            return []
+        return [{**f, "partition": _hive_partition(f["path"], self._tdir(name))}
+                for f in m["files"][len(m["files"]) - m["n_new_files"]:]]
+
     # --------------------------------------------------------------- read
     def read(self, spark: SparkSession, name: str, schema: T.StructType) -> DataFrame:
         m = self.manifest(name)
         if m is None or not m["files"]:
             # one slice: createDataFrame parallelizes into defaultParallelism
             # EMPTY partitions, so every consumer stage of an empty table read
-            # pays a cores-wide task launch for nothing (round 1 reads 4
-            # not-yet-existing tables — measured 32-task 0-CPU stages)
+            # pays a cores-wide task launch for nothing
             from .. import schema as _schema_mod
             return _schema_mod.local_df(spark, [], schema)
         return spark.read.schema(schema).parquet(*[f["path"] for f in m["files"]])
 
-    def exists(self, name: str) -> bool:
-        return self.current_snapshot(name) is not None
-
     # -------------------------------------------------------------- commit
+    def _snapshot(self, name: str, mode: str, round_no: int | None, write,
+                  replaced_partitions: dict[str, list] | None = None) -> int:
+        """The one commit path: allocate snapshot parent+1, empty its `snap-N`
+        dir, let `write(data_dir)` fill it, footer-scan the new files, carry
+        the parent's files per `mode`, write the manifest, swap CURRENT.
+
+        mode='overwrite'  — snapshot is exactly the new files.
+        mode='append'     — snapshot = parent files + new files.
+        mode='overwrite-partitions' with replaced_partitions={'col': [v,...]}
+          — parent files whose partition value ∉ list, + new files (the
+          MERGE-touches-only-dirty-buckets path: untouched bucket files are
+          carried by reference, never rewritten).
+
+        The dir is emptied first because ids are re-used: after a crash,
+        `restore_round` points CURRENT back at the last completed round, and
+        the next commit allocates the crashed attempt's id again.
+        """
+        if mode not in ("overwrite", "append", "overwrite-partitions"):
+            raise ValueError(f"unknown commit mode: {mode}")
+        tdir = self._tdir(name)
+        (tdir / "_manifests").mkdir(parents=True, exist_ok=True)
+        parent = self.current_snapshot(name)
+        snap = (parent or 0) + 1
+        data_dir = tdir / f"snap-{snap:012d}"
+        shutil.rmtree(data_dir, ignore_errors=True)
+        data_dir.mkdir()
+        t0 = time.time()
+        write(data_dir)
+        t1 = time.time()
+        new_files = _scan_paths(sorted(data_dir.rglob("*.parquet")))
+        t2 = time.time()
+        kept = self.manifest(name, parent)["files"] if parent and mode != "overwrite" else []
+        if kept and mode == "overwrite-partitions":
+            (col, vals), = replaced_partitions.items()
+            vals = {v if v is None else str(v) for v in vals}
+            kept = [f for f in kept if _hive_partition(f["path"], tdir).get(col) not in vals]
+        files = kept + new_files
+        man = {"table": name, "snapshot": snap, "parent": parent, "round": round_no,
+               "mode": mode, "write_ms": int((t1 - t0) * 1000),
+               "scan_ms": int((t2 - t1) * 1000), "n_new_files": len(new_files),
+               "files": files, "total_rows": sum(f["rows"] for f in files),
+               "total_bytes": sum(f["bytes"] for f in files),
+               "new_rows": sum(f["rows"] for f in new_files)}
+        _atomic_write(self._manifest_path(name, snap), json.dumps(man))
+        self.set_current(name, snap)
+        return snap
+
     def commit(
         self,
         name: str,
@@ -96,77 +183,35 @@ class Catalog:
         mode: str = "overwrite",
         round_no: int | None = None,
         partition_by: list[str] | None = None,
-        metrics: dict | None = None,
         replaced_partitions: dict[str, list] | None = None,
         split_col: str | None = None,
         files_per_partition: int = 1,
     ) -> int:
-        """Write df as a new snapshot.
-
-        mode='overwrite'  — snapshot is exactly df's files.
-        mode='append'     — snapshot = parent files + df's files.
-        replaced_partitions={'col': [v,...]} with mode='overwrite-partitions'
-          — snapshot = parent files whose partition value ∉ list, + df's
-          files (the MERGE-touches-only-dirty-buckets path: at 10^10 rows a
-          round touches a fraction of buckets; untouched bucket files are
-          carried by reference, never rewritten).
-        """
-        tdir = self._tdir(name)
-        (tdir / "_manifests").mkdir(parents=True, exist_ok=True)
-        parent = self.current_snapshot(name)
-        snap = (parent or 0) + 1
-        data_dir = tdir / f"snap-{snap:012d}"
-
-        t0 = time.time()
-        df.sparkSession.sparkContext.setJobDescription(f"commit:{name}")
+        """Write df with Spark as a new snapshot (modes: see `_snapshot`)."""
         if partition_by:
             # cluster rows so each partition value lands in a BOUNDED number
             # of files: without this, a partitioned write fans out
-            # shuffle_partitions × values files (2048 at 32 cores × 64
-            # buckets), and per-file costs — footer scan here, file listing
-            # on every read — grow WITH core count, inverting scaling.
-            # files_per_partition > 1 + split_col salts hot partition values
-            # across up to that many writer tasks (r1 ADVICE: a single file
-            # per value caps write parallelism at the touched-bucket count
-            # and makes hot buckets single giant files).
-            cols = [_fcol(c) for c in partition_by]
+            # shuffle_partitions × values files, and the per-file costs (the
+            # footer scan here, file listing on every read) grow with core
+            # count. files_per_partition > 1 + split_col salts hot partition
+            # values across up to that many writer tasks, so one hot bucket
+            # is neither a single giant file nor a single writer.
+            cols = [_fn.col(c) for c in partition_by]
             if split_col and files_per_partition > 1:
-                cols.append(
-                    _fn.pmod(_fn.crc32(_fcol(split_col).cast("string")),
-                             _fn.lit(files_per_partition))
-                )
+                cols.append(_fn.pmod(_fn.crc32(_fn.col(split_col).cast("string")),
+                                     _fn.lit(files_per_partition)))
             df = df.repartition(*cols)
         writer = df.write.mode("overwrite")
         if partition_by:
             writer = writer.partitionBy(*partition_by)
-        writer.parquet(str(data_dir))
-        df.sparkSession.sparkContext.setJobDescription(None)
-        write_ms = int((time.time() - t0) * 1000)
 
-        t1 = time.time()
-        new_files = self._scan_files(data_dir)
-        scan_ms = int((time.time() - t1) * 1000)
-        files: list[dict]
-        if mode == "overwrite" or parent is None:
-            files = new_files
-        elif mode == "append":
-            files = list(self.manifest(name, parent)["files"]) + new_files
-        elif mode == "overwrite-partitions":
-            assert replaced_partitions and len(replaced_partitions) == 1
-            col, vals = next(iter(replaced_partitions.items()))
-            tokens = {f"{col}={v}" for v in vals}
-            kept = [
-                f
-                for f in self.manifest(name, parent)["files"]
-                if not any(tok in f["path"].split(os.sep) for tok in tokens)
-            ]
-            files = kept + new_files
-        else:
-            raise ValueError(f"unknown commit mode: {mode}")
+        def write(data_dir: Path) -> None:
+            sc = df.sparkSession.sparkContext
+            sc.setJobDescription(f"commit:{name}")
+            writer.parquet(str(data_dir))
+            sc.setJobDescription(None)
 
-        self._write_manifest(name, snap, parent, round_no, mode, files, new_files,
-                             metrics, write_ms, scan_ms)
-        return snap
+        return self._snapshot(name, mode, round_no, write, replaced_partitions)
 
     def commit_files(
         self,
@@ -174,46 +219,25 @@ class Catalog:
         file_paths: list[str | Path],
         mode: str = "overwrite",
         round_no: int | None = None,
-        metrics: dict | None = None,
     ) -> int:
         """Manifest-only commit: adopt ALREADY-WRITTEN parquet files (e.g. a
         partition of an intra-round stage) as a new snapshot — no Spark job.
         Files are hardlinked into the snapshot dir (copy fallback), so the
-        snapshot survives `drop_stages`. This is the floor-cut path: when a
-        sink is a pure row-subset of a stage that was partitioned on the
-        subset predicate, the commit collapses to a driver-side link+footer
-        scan. The Iceberg analog is manifest reuse of unchanged data files.
-
-        Adopted files may carry EXTRA physical columns (stages hold working
-        columns); readers go through `read(schema)` which projects the
-        table's declared columns only.
+        snapshot survives `drop_stages`. When a sink is a pure row-subset of
+        a stage partitioned on the subset predicate, its commit is this
+        driver-side link + footer scan (Iceberg: manifest reuse of unchanged
+        data files). Adopted files may carry EXTRA physical columns (stages
+        hold working columns); `read(schema)` projects the declared ones.
         """
-        tdir = self._tdir(name)
-        (tdir / "_manifests").mkdir(parents=True, exist_ok=True)
-        parent = self.current_snapshot(name)
-        snap = (parent or 0) + 1
-        data_dir = tdir / f"snap-{snap:012d}"
-        data_dir.mkdir(parents=True, exist_ok=True)
-        linked: list[Path] = []
-        for i, src in enumerate(sorted(str(p) for p in file_paths)):
-            dst = data_dir / f"adopt-{i:05d}.parquet"
-            try:
-                os.link(src, dst)
-            except OSError:
-                import shutil
+        def write(data_dir: Path) -> None:
+            for i, src in enumerate(sorted(str(p) for p in file_paths)):
+                dst = data_dir / f"adopt-{i:05d}.parquet"
+                try:
+                    os.link(src, dst)
+                except OSError:
+                    shutil.copy2(src, dst)
 
-                shutil.copy2(src, dst)
-            linked.append(dst)
-        new_files = self._scan_paths(linked)
-        if mode == "overwrite" or parent is None:
-            files = new_files
-        elif mode == "append":
-            files = list(self.manifest(name, parent)["files"]) + new_files
-        else:
-            raise ValueError(f"commit_files: unsupported mode {mode}")
-        self._write_manifest(name, snap, parent, round_no, mode, files, new_files,
-                             metrics, write_ms=0, scan_ms=0)
-        return snap
+        return self._snapshot(name, mode, round_no, write)
 
     def commit_rows(
         self,
@@ -227,10 +251,6 @@ class Catalog:
         round's metrics rollup, O(domains×statuses) rows) via pyarrow: no
         Spark job at all. Schema is the table's Spark StructType, mapped to
         arrow so `read(schema)` round-trips exactly."""
-        import pyarrow as pa
-
-        _ARROW = {"integer": pa.int32(), "long": pa.int64(), "string": pa.string(),
-                  "double": pa.float64(), "boolean": pa.bool_()}
         arrow_schema = pa.schema(
             [(f.name, _ARROW[f.dataType.typeName()]) for f in schema.fields]
         )
@@ -239,68 +259,11 @@ class Catalog:
             [pa.array(list(c), type=f.type) for c, f in zip(cols, arrow_schema)],
             schema=arrow_schema,
         )
-        tdir = self._tdir(name)
-        (tdir / "_manifests").mkdir(parents=True, exist_ok=True)
-        parent = self.current_snapshot(name)
-        snap = (parent or 0) + 1
-        data_dir = tdir / f"snap-{snap:012d}"
-        data_dir.mkdir(parents=True, exist_ok=True)
-        out = data_dir / "part-00000.parquet"
-        pq.write_table(table, out)
-        new_files = self._scan_paths([out])
-        if mode == "overwrite" or parent is None:
-            files = new_files
-        elif mode == "append":
-            files = list(self.manifest(name, parent)["files"]) + new_files
-        else:
-            raise ValueError(f"commit_rows: unsupported mode {mode}")
-        self._write_manifest(name, snap, parent, round_no, mode, files, new_files,
-                             None, write_ms=0, scan_ms=0)
-        return snap
-
-    def _write_manifest(self, name, snap, parent, round_no, mode, files,
-                        new_files, metrics, write_ms, scan_ms) -> None:
-        man = {
-            "table": name,
-            "snapshot": snap,
-            "parent": parent,
-            "round": round_no,
-            "mode": mode,
-            "write_ms": write_ms,
-            "scan_ms": scan_ms,
-            "n_new_files": len(new_files),
-            "files": files,
-            "total_rows": sum(f["rows"] for f in files),
-            "total_bytes": sum(f["bytes"] for f in files),
-            "new_rows": sum(f["rows"] for f in new_files),
-            "metrics": metrics or {},
-        }
-        mp = self._manifest_path(name, snap)
-        tmp = mp.with_suffix(f".tmp-{uuid.uuid4().hex}")
-        tmp.write_text(json.dumps(man))
-        os.replace(tmp, mp)
-        self.set_current(name, snap)
-
-    @staticmethod
-    def _scan_paths(paths: list[Path]) -> list[dict]:
-        from concurrent.futures import ThreadPoolExecutor
-
-        def one(p: Path) -> dict:
-            meta = pq.ParquetFile(p).metadata
-            return {"path": str(p), "rows": meta.num_rows, "bytes": p.stat().st_size}
-
-        if len(paths) <= 4:
-            return [one(p) for p in paths]
-        with ThreadPoolExecutor(max_workers=16) as pool:
-            return list(pool.map(one, paths))
-
-    @classmethod
-    def _scan_files(cls, data_dir: Path) -> list[dict]:
-        return cls._scan_paths(sorted(data_dir.rglob("*.parquet")))
+        return self._snapshot(name, mode, round_no,
+                              lambda d: pq.write_table(table, d / "part-00000.parquet"))
 
     # ------------------------------------------------------------- stages
     def stage(self, spark: SparkSession, round_no: int, name: str, df: DataFrame,
-              repartition: int | None = None,
               partition_by: list[str] | None = None,
               shuffle: bool = True) -> DataFrame:
         """Materialize an intra-round intermediate to parquet and return a
@@ -315,24 +278,20 @@ class Catalog:
         Stages are transient (no manifest): resume replays the whole round
         from the last committed snapshot, so stage files never need recovery.
         """
-        path = self.root / "_stages" / f"r{round_no:08d}" / name
+        path = self._stage_dir(round_no, name)
         spark.sparkContext.setJobDescription(f"stage:{name}")
         if partition_by:
-            # partitioned stage: the partition-value *set* becomes readable
-            # driver-side from the directory names (stage_partition_values) —
-            # replaces a distinct().collect() job with a listdir.
-            # shuffle=False keeps the upstream partitioning (each task writes
-            # ≤|values| files) — for LOW-cardinality partition cols (e.g. a
-            # boolean disposition) where clustering would collapse the write
-            # to |values| tasks and serialize a wave; the file-count bound is
-            # tasks×values, and downstream reads get partition PRUNING, which
-            # is the point (stage_partition_files adopts a value's files into
-            # a snapshot without any Spark job).
-            w = df.repartition(*[_fcol(c) for c in partition_by]) if shuffle else df
+            # partitioned stage: its partition values are read driver-side
+            # from the directory names (stage_partition_values, no job), and
+            # a value's files can be adopted into a snapshot with no job
+            # (stage_partition_files → commit_files). shuffle=False keeps the
+            # upstream partitioning (each task writes ≤|values| files): for
+            # LOW-cardinality columns, clustering would collapse the write to
+            # |values| tasks and serialize a wave.
+            w = df.repartition(*[_fn.col(c) for c in partition_by]) if shuffle else df
             w.write.mode("overwrite").partitionBy(*partition_by).parquet(str(path))
         else:
-            w = df.repartition(repartition) if repartition else df
-            w.write.mode("overwrite").parquet(str(path))
+            df.write.mode("overwrite").parquet(str(path))
         spark.sparkContext.setJobDescription(None)
         # read back with the writer's schema: a partitioned write of an EMPTY
         # frame (e.g. a converged round with no updates) leaves zero data
@@ -340,51 +299,35 @@ class Catalog:
         return spark.read.schema(df.schema).parquet(str(path))
 
     def stage_partition_files(self, round_no: int, name: str,
-                              **partition_values: str) -> list[Path]:
-        """Data files of one partition of a partitioned stage (hive dir
-        layout), listed driver-side — the input to `commit_files`."""
-        base = self.root / "_stages" / f"r{round_no:08d}" / name
-        for k, v in partition_values.items():
-            base = base / f"{k}={v}"
-        if not base.exists():
-            return []
-        return sorted(base.rglob("*.parquet"))
+                              **partition_values) -> list[Path]:
+        """Data files of a stage whose parsed partition values equal the
+        given ones (all files when none are given), listed driver-side —
+        the input to `commit_files`."""
+        base = self._stage_dir(round_no, name)
+        want = {k: v if v is None else str(v) for k, v in partition_values.items()}
+        return [p for p in sorted(base.rglob("*.parquet"))
+                if all(_hive_partition(p, base).get(k) == v for k, v in want.items())]
 
-    def stage_rows(self, round_no: int, name: str, **partition_values: str) -> int:
+    def stage_rows(self, round_no: int, name: str, **partition_values) -> int:
         """Row count of a stage (or one partition of it) from parquet
         footers, driver-side — no Spark job. Lets the round skip whole
         commit/append jobs whose input is provably empty."""
-        base = self.root / "_stages" / f"r{round_no:08d}" / name
-        for k, v in partition_values.items():
-            base = base / f"{k}={v}"
-        if not base.exists():
-            return 0
-        return sum(f["rows"] for f in self._scan_paths(sorted(base.rglob("*.parquet"))))
+        paths = self.stage_partition_files(round_no, name, **partition_values)
+        return sum(f["rows"] for f in _scan_paths(paths))
 
     def stage_partition_values(self, round_no: int, name: str) -> list[dict]:
-        """Distinct partition-column value combos of a partitioned stage,
-        parsed from its hive-style directory names — no Spark job."""
-        base = self.root / "_stages" / f"r{round_no:08d}" / name
+        """Distinct partition-value combos of a partitioned stage, parsed
+        from its hive-style directory names — no Spark job."""
+        base = self._stage_dir(round_no, name)
         out = []
-
-        def walk(d: Path, acc: dict):
-            subs = [p for p in d.iterdir() if p.is_dir() and "=" in p.name]
-            if not subs:
-                if acc:
-                    out.append(dict(acc))
-                return
-            for p in subs:
-                k, v = p.name.split("=", 1)
-                walk(p, {**acc, k: v})
-
-        if base.exists():
-            walk(base, {})
+        for p in sorted(base.rglob("*.parquet")):
+            pv = _hive_partition(p, base)
+            if pv and pv not in out:
+                out.append(pv)
         return out
 
     def drop_stages(self, round_no: int) -> None:
-        import shutil
-
-        shutil.rmtree(self.root / "_stages" / f"r{round_no:08d}", ignore_errors=True)
+        shutil.rmtree(self._stage_dir(round_no), ignore_errors=True)
 
     # ------------------------------------------------------------ round log
     def commit_round(self, round_no: int, snapshots: dict[str, int], metrics: dict) -> None:
@@ -392,19 +335,12 @@ class Catalog:
         restores a mutually-consistent view of all state tables."""
         rdir = self.root / "_rounds"
         rdir.mkdir(exist_ok=True)
-        p = rdir / f"{round_no:08d}.json"
-        tmp = p.with_suffix(f".tmp-{uuid.uuid4().hex}")
-        tmp.write_text(json.dumps({"round": round_no, "snapshots": snapshots, "metrics": metrics}))
-        os.replace(tmp, p)
+        _atomic_write(rdir / f"{round_no:08d}.json",
+                      json.dumps({"round": round_no, "snapshots": snapshots, "metrics": metrics}))
 
     def last_completed_round(self) -> dict | None:
-        rdir = self.root / "_rounds"
-        if not rdir.exists():
-            return None
-        files = sorted(rdir.glob("*.json"))
-        if not files:
-            return None
-        return json.loads(files[-1].read_text())
+        files = sorted((self.root / "_rounds").glob("*.json"))
+        return json.loads(files[-1].read_text()) if files else None
 
     def restore_round(self, round_info: dict) -> None:
         """Point every table's CURRENT at the snapshots of a completed round

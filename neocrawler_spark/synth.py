@@ -430,8 +430,3 @@ def gen_robots_rows(params: dict) -> list[dict]:
 def gen_robots_df(spark: SparkSession, params: dict) -> DataFrame:
     # one-slice config frame: this df is broadcast every round (schema.local_df)
     return schema.local_df(spark, gen_robots_rows(params), schema.ROBOTS)
-
-
-def seed_list(rules: list[dict]) -> list[tuple[str, str]]:
-    """(seed_url_or_macro, rule_key) pairs — north_rule's 'same seed list'."""
-    return [(s, r["key"]) for r in rules if r.get("active") for s in r.get("seed", [])]

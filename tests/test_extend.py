@@ -95,14 +95,18 @@ def test_pipeline_hook_custom_sink(spark, tmp_path):
 
 def test_category_routing(spark, tmp_path):
     """$category-bearing rows land in crawled_{category}; base table holds
-    only category-less node rows (pipeline.js:275)."""
-    ctx = make_ctx(spark, tmp_path, "c")
-    run_rounds(ctx, 3)
-    weixin = ctx.catalog.read(spark, "crawled_weixin", schema.CRAWLED)
-    base = ctx.catalog.read(spark, "crawled", schema.CRAWLED)
-    assert weixin.count() > 0
-    assert weixin.where(F.element_at("extracted", "$category") != "weixin").count() == 0
-    assert base.count() == 0  # every node rule in the fixture declares weixin
+    only category-less node rows (pipeline.js:275). The second category has
+    a character Spark escapes in partition directory names."""
+    for i, category in enumerate(["weixin", "news:cn"]):
+        raw = synth.gen_rules(PARAMS)
+        next(r for r in raw if r["alias"] == "detail")["extract_rule"]["category"] = category
+        ctx = make_ctx(spark, tmp_path, f"c{i}", rules=load_rules(raw))
+        run_rounds(ctx, 3)
+        routed = ctx.catalog.read(spark, f"crawled_{category}", schema.CRAWLED)
+        base = ctx.catalog.read(spark, "crawled", schema.CRAWLED)
+        assert routed.count() > 0
+        assert routed.where(F.element_at("extracted", "$category") != category).count() == 0
+        assert base.count() == 0  # the detail rule is the fixture's only node rule
 
 
 # ------------------------------------------------------------- charset sniff
@@ -199,10 +203,7 @@ def test_stale_trace_redetect_on_pop(spark, tmp_path):
 def test_download_hook_and_bundle(spark, tmp_path):
     """The download middleware replaces the corpus fetch join
     (spider/downloader.js): here it serves every batch row from a rewritten
-    corpus (uppercased golden marker) via the SpiderExtend bundle, proving
-    both the hook point and the assembly-init wiring."""
-    from neocrawler_spark.plans.round import SpiderExtend
-
+    corpus (uppercased golden marker), set as the context's download_hook."""
     marker = "HOOKFETCH"
 
     def dl(batch, pages):
@@ -221,9 +222,7 @@ def test_download_hook_and_bundle(spark, tmp_path):
         )
         return batch.join(rewritten, "url", "left")
 
-    ctx = make_ctx(spark, tmp_path, "dl",
-                   settings={"spider_extend": SpiderExtend(download_hook=dl)})
-    assert ctx.download_hook is dl  # bundle wired by assembly init
+    ctx = make_ctx(spark, tmp_path, "dl", download_hook=dl)
     run_rounds(ctx, 3)
     crawled = ctx.catalog.read(spark, "crawled_weixin", schema.CRAWLED)
     assert crawled.count() > 0
@@ -237,14 +236,11 @@ def test_alert_hook_sees_every_round(spark, tmp_path):
     """alert_hook (lib/mail.js monitoring-callback analog) fires once per
     committed round with the driver-side metrics, including a breaker-tripped
     round."""
-    from neocrawler_spark.plans.round import SpiderExtend
-
     calls = []
     pages = synth.gen_pages_df(spark, PARAMS).where(~F.col("url").contains("weixin_"))
     ctx = make_ctx(
-        spark, tmp_path, "a", pages=pages,
-        settings={"failure_breaker": 1,
-                  "spider_extend": SpiderExtend(alert_hook=lambda rn, m: calls.append((rn, m)))},
+        spark, tmp_path, "a", pages=pages, settings={"failure_breaker": 1},
+        alert_hook=lambda rn, m: calls.append((rn, m)),
     )
     with pytest.raises(CircuitBreakerTripped):
         run_rounds(ctx, 4)
