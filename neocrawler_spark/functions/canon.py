@@ -137,11 +137,6 @@ def wash_links(page_url: str, links: list[str | None]) -> list[str]:
 
 
 @pandas_udf(StringType())
-def host_udf(urls: pd.Series) -> pd.Series:
-    return urls.map(lambda u: url_host(u) if isinstance(u, str) else None)
-
-
-@pandas_udf(StringType())
 def domain_udf(urls: pd.Series) -> pd.Series:
     return urls.map(lambda u: url_domain(u) if isinstance(u, str) else None)
 

@@ -34,7 +34,7 @@ from typing import Any
 import pandas as pd
 
 from . import css
-from .canon import wash_links
+from .canon import url_host, wash_links
 
 # --------------------------------------------------------------- selectors
 
@@ -295,7 +295,8 @@ def sniff_charset(head: bytes, default: str = "utf-8") -> str:
 # ------------------------------------------------------------ Spark UDF
 
 _RESULT_SCHEMA = (
-    "arranged array<struct<lib:string, link:string>>, extracted map<string,string>, "
+    "arranged array<struct<lib:string, link:string, host:string>>, "
+    "extracted map<string,string>, "
     "children array<struct<category:string, relate:string, fields:map<string,string>>>, "
     "drill_relation string, lacks array<string>"
 )
@@ -312,7 +313,8 @@ def extract_udf(
     reference's driller_rules reload (spider.js:87-129).
 
     Output `arranged` is the washed+arranged link set: (target urllib key,
-    canonical URL) pairs, page-order, deduped per lib (extractor.js:111-143).
+    canonical URL, its host) triples, page-order, deduped per lib
+    (extractor.js:111-143).
     """
     import pyspark.sql.functions as F
     from ..rules import arrange_links
@@ -335,7 +337,7 @@ def extract_udf(
                 html = raw.decode(enc, errors="replace")
             res = process_document(url, html, rule, orel, keep_link_relation)
             arranged = [
-                {"lib": lib, "link": link}
+                {"lib": lib, "link": link, "host": url_host(link)}
                 for lib, links in arrange_links(res["links"], by_domain).items()
                 for link in links
             ]

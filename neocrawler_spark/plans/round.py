@@ -76,7 +76,7 @@ DISC_RANK = 255  # discovery appends sort after all scheduled entries
 FETCH_BROADCAST_LIMIT = 100_000
 # commit pool width: one commit's driver-side tail (footer scans, manifest
 # writes) back-fills with the next commit's compute, while more concurrent
-# py4j write jobs stall each other (8-20x at local[32])
+# py4j write jobs stall each other
 COMMIT_WORKERS = 2
 
 DEFAULT_SETTINGS = {
@@ -122,8 +122,8 @@ def _with_rule_cols(df: DataFrame, ctx: "CrawlContext", cols: list[str]) -> Data
     keeps the same shape: the map literal ships inside the task binary like
     any broadcast, minus the build job. The map Column is built ONCE per
     context and reused across all sites and rounds: Column construction is
-    py4j-call-bounded (rebuilding the literal at every site cost 3.4 s per
-    4-round crawl)."""
+    one py4j call per node, so rebuilding the literal at every site would
+    add driver time to every round."""
     if not ctx.rules:
         out = df
         for c in cols:
@@ -300,8 +300,8 @@ def _open_round(ctx: CrawlContext, state: dict) -> _Round:
     # partitioning is deterministic by construction (md5-uniform url_hash
     # keys, salted politeness, bucketed prefix sums, manifest-known sizes),
     # so runtime re-planning has no information advantage, and its
-    # per-exchange materialization barriers double the driver jobs per round
-    # (127 vs 59). Analytic queries outside run_round keep AQE on.
+    # per-exchange materialization barriers add a driver job per exchange.
+    # Analytic queries outside run_round keep AQE on.
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     return _Round(
         spark=spark, no=no,
@@ -809,11 +809,11 @@ def discover(ctx: CrawlContext, rnd: _Round, out: _Outcomes, batch_rows: int):
             "referer_url", "parent_seq", "parent_version", "parent_relation", "pos",
             F.expr("substring(lk.lib, 8)").alias("rule_key"),  # strip 'urllib:'
             F.col("lk.link").alias("url"),
+            F.col("lk.host").alias("host"),
         )
     )
     cand = (
         canon.with_url_identity(links, buckets=ctx.settings["buckets"])
-        .withColumn("host", canon.host_udf(F.col("url")))
         # first-occurrence-wins cross-page dedup, pinned to (pop order, page pos)
         .withColumn("rn", F.row_number().over(
             Window.partitionBy("url_hash").orderBy("parent_seq", "pos")))

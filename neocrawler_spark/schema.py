@@ -161,10 +161,9 @@ ROBOTS = T.StructType(
 def local_df(spark, rows, schema):
     """Driver-built config frame as ONE slice. Plain createDataFrame
     parallelizes into defaultParallelism pickled partitions, so every
-    broadcast build / consumer stage over a tiny config frame pays a
-    cores-wide task launch plus a per-partition Python round-trip
-    (measured at local[32]: ~0.5 s/broadcast at 32 slices, ~3.8 s(!) when
-    coalesce(1) serializes the 32 round-trips, 0.33 s as one slice).
+    broadcast build / consumer stage over a tiny config frame would pay a
+    cores-wide task launch plus a per-partition Python round-trip (and
+    coalesce(1) would serialize those round-trips instead of removing them).
     Config frames (rules, seeds, robots, empty table stubs) are bounded by
     operator config, never by corpus size, so one slice is the scale-safe
     shape too."""

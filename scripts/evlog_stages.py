@@ -70,12 +70,10 @@ def parse_evlog(path):
             m = ev.get("Task Metrics") or {}
             a = task_agg[sid]
             # Executor Run Time is the task thread's WALL (ms); Executor CPU
-            # Time is actual thread CPU (ns). The distinction decides the r4
-            # local[16] "GC anomaly": summed per-task wall AND per-task GC
-            # both scale with the number of CONCURRENT tasks (a shared 10 s
-            # STW pause charges 10 s to each of 16 running tasks = 160 s
-            # summed at local[16] but 40 s at local[4]), so cross-level
-            # comparisons must use cpu_s, not run_s/gc_s.
+            # Time is actual thread CPU (ns). Summed per-task wall and GC time
+            # both scale with the number of concurrent tasks (one stop-the-
+            # world pause is charged to every running task), so only cpu_s
+            # compares across parallelism levels.
             a["run_s"] += m.get("Executor Run Time", 0) / 1000
             a["cpu_true_s"] += m.get("Executor CPU Time", 0) / 1e9
             a["gc_s"] += m.get("JVM GC Time", 0) / 1000
@@ -120,67 +118,6 @@ def parse_evlog(path):
         })
     rows.sort(key=lambda r: -(r["wall_s"] or 0))
     return rows
-
-
-def evlog_totals(path) -> dict:
-    """Noise-discriminating totals. task_cpu_s (true thread CPU) is the only
-    figure comparable ACROSS parallelism levels: task_run_s and gc_s are
-    summed per-task walls, which scale with the number of concurrently
-    running tasks (the r4 'GC anomaly' was mostly this attribution artifact
-    — a shared STW pause bills every running task). Within one level,
-    run_s vs cpu_s divergence still flags stall (GC/steal/membw)."""
-    rows = parse_evlog(path)
-    return {
-        "stages": len(rows),
-        "stage_wall_s": round(sum(r["wall_s"] or 0 for r in rows), 1),
-        "task_run_s": round(sum(r["cpu_s"] for r in rows), 1),
-        # legacy key, r4 artifacts recorded summed RUN time under this name
-        "task_cpu_s": round(sum(r["cpu_true_s"] for r in rows), 1),
-        "gc_s": round(sum(r["gc_s"] for r in rows), 1),
-        "spill_mb": round(sum(r["spill_mb"] for r in rows), 1),
-        "py_s": round(sum(r["py_s"] for r in rows), 1),
-    }
-
-
-def gclog_totals(path) -> dict | None:
-    """Totals from a -Xlog:gc* unified-logging file: actual STW pause wall
-    (the ground truth the summed per-task gc_s must be reconciled against —
-    at local[N], summed gc_s ≈ N × pause wall when all slots are busy) plus
-    pause counts by kind and the final heap size line if present."""
-    import os
-    import re
-
-    if not path or not os.path.exists(path):
-        return None
-    # matches G1 pause lines with or without a cause clause, e.g.
-    #   GC(5) Pause Young (Normal) (G1 Evacuation Pause) 1024M->128M(49152M) 12.345ms
-    #   GC(6) Pause Remark 1500M->1500M(49152M) 5.123ms
-    pause_re = re.compile(r"GC\(\d+\) Pause ([A-Za-z ]+?) .*?(\d+(?:\.\d+)?)ms$")
-    total_ms, by_kind, n = 0.0, {}, 0
-    max_heap_mb = 0.0
-    heap_re = re.compile(r"(\d+)M->(\d+)M\((\d+)M\)")
-    with open(path, errors="replace") as f:
-        for line in f:
-            line = line.rstrip()
-            m = pause_re.search(line)
-            if m:
-                kind = m.group(1).strip()
-                ms = float(m.group(2))
-                total_ms += ms
-                n += 1
-                k = by_kind.setdefault(kind, {"n": 0, "ms": 0.0})
-                k["n"] += 1
-                k["ms"] += ms
-            h = heap_re.search(line)
-            if h:
-                max_heap_mb = max(max_heap_mb, float(h.group(1)))
-    return {
-        "pause_wall_s": round(total_ms / 1000, 2),
-        "pauses": n,
-        "by_kind": {k: {"n": v["n"], "s": round(v["ms"] / 1000, 2)}
-                    for k, v in by_kind.items()},
-        "max_heap_used_mb": round(max_heap_mb, 0),
-    }
 
 
 def job_timeline(path):

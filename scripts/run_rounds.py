@@ -3,12 +3,13 @@
 "runs via spark-submit --py-files"):
 
   zip -r engine.zip neocrawler_spark
-  spark-submit --master local[32] --py-files engine.zip scripts/run_rounds.py \\
+  spark-submit --py-files engine.zip scripts/run_rounds.py \\
       --warehouse /tmp/wh --rounds 5 --corpus /tmp/wh/pages_corpus
 
-On a real cluster the same invocation runs with --master yarn/k8s and the
-warehouse on shared storage; resume is automatic (the catalog restores the
-last completed round).
+The session comes from `session.get_spark`, which keeps spark-submit's
+--master (local[*] when none is given): a real cluster runs the same
+invocation with --master yarn/k8s and the warehouse on shared storage.
+Resume is automatic (the catalog restores the last completed round).
 """
 
 from __future__ import annotations
@@ -31,14 +32,14 @@ def main() -> int:
                     help="D,cats,lists,details,hot_details for the synth corpus")
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
-
-    spark = SparkSession.builder.getOrCreate()  # conf comes from spark-submit
     from neocrawler_spark import synth
     from neocrawler_spark.plans.round import CrawlContext
     from neocrawler_spark.rules import load_rules
+    from neocrawler_spark.session import get_spark
     from neocrawler_spark.sources.tables import Catalog
     from neocrawler_spark.streaming.driver import run_rounds
+
+    spark = get_spark("run_rounds")
 
     d, c, p, k, hk = (int(x) for x in args.synth_scale.split(","))
     params = synth.site_params(d, c, p, k, hk)

@@ -14,7 +14,7 @@ from neocrawler_spark.session import get_spark
 
 
 def main():
-    spark = get_spark("smoke_golden", master="local[8]", shuffle_partitions=8)
+    spark = get_spark("smoke_golden")
     df = entry_mod._crawl_round_smoke(spark, "/root/testdata/sf0.001")
     rows = sorted(
         (tuple(r) for r in df.collect()), key=lambda t: (t[0], t[1])

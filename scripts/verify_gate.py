@@ -50,7 +50,7 @@ def fingerprint(cols, rows):
 
 
 def main():
-    spark = get_spark("verify_gate", master="local[8]", shuffle_partitions=8)
+    spark = get_spark("verify_gate")
     failures = []
 
     # --- 1. entry() smoke -------------------------------------------------

@@ -5,7 +5,7 @@ from neocrawler_spark.session import get_spark
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("neocrawler-tests", master="local[4]", shuffle_partitions=4)
+    s = get_spark("neocrawler-tests")
     yield s
 
 
