@@ -717,8 +717,9 @@ def fetch_extract(ctx: CrawlContext, rnd: _Round, batch: DataFrame, n_seeds: int
     # that, and its shuffle is tiny. LARGE waves must NOT repartition: that
     # would push the multi-GB html column through a shuffle; they instead
     # ride the corpus scan's file splits, which are plentiful exactly when
-    # the wave is large (spark.sql.files.maxPartitionBytes=64m in session.py
-    # keeps scan splits ≈ 2×cores for multi-GB corpora).
+    # the wave is large (Spark's default split size, 128 MB or the input
+    # divided by the core count if smaller, gives a multi-GB corpus several
+    # splits per core).
     # ~100 pages/task, floored at the core count once there's at least one
     # page per core: hub-heavy rounds (few pages, hundreds of links each)
     # must still fan out across all cores. Rounded UP to a multiple of the

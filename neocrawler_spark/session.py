@@ -3,7 +3,7 @@
 It sets no master unless asked: spark-submit's ``--master`` wins, and plain
 Python gets PySpark's ``local[*]``. Shuffle partitions default to the
 session's ``defaultParallelism``. The only confs it sets are the ones the
-engine's semantics need; everything else is Spark's default.
+engine needs, each with its reason; everything else is Spark's default.
 """
 
 from __future__ import annotations
@@ -48,8 +48,9 @@ def get_spark(
         .config("spark.sql.legacy.javaCharsets", "true")
         # date and timestamp functions must not depend on the host's zone
         .config("spark.sql.session.timeZone", "UTC")
-        # toPandas / createDataFrame(pandas) move Arrow batches, not pickled rows
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        # one round generates ~300 distinct classes, and Spark's default cache
+        # of 100 evicts them before the next round can reuse them
+        .config("spark.sql.codegen.cache.maxEntries", "1024")
         # no web UI: no port to bind, and no listener keeping every job of
         # every round in driver memory
         .config("spark.ui.enabled", "false")

@@ -1,9 +1,11 @@
 """End-to-end multi-round crawl over the deterministic synthetic site graph
 (SURVEY.md §5 strategy b/c): asserts frontier/seen-set growth, byte-identical
 extracted text vs the generator goldens, quota/politeness behavior,
-rerun determinism, and crash-resume determinism."""
+rerun determinism, crash-resume determinism, and that a replayed round
+compiles no new code."""
 
 import json
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -188,3 +190,23 @@ def test_quota_limit_respected(spark, tmp_path):
     m = run_rounds(ctx, 2)
     # round 2's newly scheduled from frontier ≤ balance (5) + seeds
     assert m[1]["fetched"] <= 5 + 4  # 4 = home seeds + macro seeds upper bound
+
+
+def test_round_replay_compiles_nothing(spark, tmp_path):
+    """A round replayed on the same session reuses every class its first run
+    generated: Spark's codegen cache holds a whole round's working set."""
+    ctx = make_ctx(spark, tmp_path, "wh")
+    run_rounds(ctx, 3)
+    shutil.copytree(ctx.catalog.root, tmp_path / "after3")
+    first = run_rounds(ctx, 1)
+    shutil.rmtree(ctx.catalog.root)
+    shutil.copytree(tmp_path / "after3", ctx.catalog.root)
+    replay_ctx = make_ctx(spark, tmp_path, "wh")
+    assert load_state(replay_ctx.catalog)["round"] == 3
+
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    before = compiles.getCount()
+    replay = run_rounds(replay_ctx, 1)
+    assert compiles.getCount() - before == 0
+    assert replay[0]["round"] == first[0]["round"] == 4
+    assert replay[0]["fetched"] == first[0]["fetched"] > 0

@@ -1,7 +1,7 @@
 """`session.get_spark` under each launcher: spark-submit's --master and plain
-Python's local[*] size the session, and the engine's decode semantics hold
-on the spark-submit path too. Each case runs in its own process, since one
-process holds only one SparkContext."""
+Python's local[*] size the session, and the engine's decode semantics and
+codegen cache size hold on the spark-submit path too. Each case runs in its
+own process, since one process holds only one SparkContext."""
 
 import json
 import os
@@ -23,6 +23,7 @@ print("PROBE " + json.dumps({
     "parallelism": spark.sparkContext.defaultParallelism,
     "shuffle_partitions": spark.conf.get("spark.sql.shuffle.partitions"),
     "coding_error_action": spark.conf.get("spark.sql.legacy.codingErrorAction"),
+    "codegen_cache": spark.conf.get("spark.sql.codegen.cache.maxEntries"),
     "decoded": spark.sql("SELECT decode(X'FF41', 'utf-8') AS s").first()["s"],
 }))
 """
@@ -57,6 +58,7 @@ def test_spark_submit_master_wins(tmp_path):
     assert got["master"] == "local[1]"
     assert got["shuffle_partitions"] == "1"
     assert got["coding_error_action"] == "true"
+    assert got["codegen_cache"] == "1024"
     assert "�" in got["decoded"]
 
 
