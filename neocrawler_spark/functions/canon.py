@@ -17,9 +17,11 @@ Reproduces, bug-for-bug, the reference's URL identity semantics:
   ``prefix{x}suffix`` for x in [min, max] step —
   /root/reference/scheduler/index.js:167-178.
 
-The vectorized entry points are pandas UDFs (Arrow batches); the scalar
-pure-Python versions are shared with the test oracle so parity is by
-construction on the Python side and asserted against Spark output in tests.
+The vectorized entry points are JVM column expressions where Spark has the
+primitives (md5 identity, hash bucket, TLD of a host) and pandas UDFs (Arrow
+batches) where the rule needs urllib; the scalar pure-Python versions are
+shared with the test oracle so parity is by construction on the Python side
+and asserted against Spark output in tests.
 """
 
 from __future__ import annotations
@@ -132,13 +134,8 @@ def wash_links(page_url: str, links: list[str | None]) -> list[str]:
 
 # --------------------------------------------------------------- pandas UDFs
 # Hot-path batch versions. URL hashing itself stays JVM-side (F.md5);
-# canonicalization and host parsing need Python's urllib so they run as
-# Arrow-batched pUDFs (never row-at-a-time Python UDFs).
-
-
-@pandas_udf(StringType())
-def domain_udf(urls: pd.Series) -> pd.Series:
-    return urls.map(lambda u: url_domain(u) if isinstance(u, str) else None)
+# canonicalization needs Python's urllib so it runs as an Arrow-batched pUDF
+# (never a row-at-a-time Python UDF).
 
 
 def canonicalize_udf(id_param_by_rule: dict[str, list[str] | None]):
@@ -171,3 +168,12 @@ def with_url_identity(df, url_col: str = "url", buckets: int = 4096):
 
 def bucket_of_hash(buckets: int = 4096):
     return (F.conv(F.substring("url_hash", 1, 3), 16, 10).cast("int") % F.lit(buckets)).cast("int")
+
+
+def domain_of_host(host):
+    """top_level_domain as a JVM column expression over a host column (the
+    round's metrics key {metric}:{domain}, spider_extend.js:97-169)."""
+    parts = F.split(host, r"\.")
+    return F.when(F.size(parts) <= 2, host).otherwise(
+        F.array_join(F.slice(parts, 2, 1_000), ".")
+    )

@@ -32,6 +32,8 @@ import re
 from typing import Any
 
 import pandas as pd
+from pyspark.sql import Column
+from pyspark.sql import functions as F
 
 from . import css
 from .canon import url_host, wash_links
@@ -217,6 +219,18 @@ def validate_content(
     return not status_code > 300  # 30x/40x/50x invalid; <=300 passes
 
 
+def content_valid(content: Column, is_binary: Column, keywords: Column) -> Column:
+    """validate_content's status-200 branch as one JVM column expression —
+    the check the round applies to every fetched page, with no Python in the
+    hot path. A NULL is_binary counts as html, a NULL keyword array as no
+    keywords."""
+    return (
+        (F.length(content) >= F.when(is_binary, F.lit(20)).otherwise(F.lit(500)))
+        & F.forall(F.coalesce(keywords, F.array().cast("array<string>")),
+                   lambda k: content.contains(k))
+    )
+
+
 # ------------------------------------------------------------ document eval
 
 
@@ -316,7 +330,6 @@ def extract_udf(
     canonical URL, its host) triples, page-order, deduped per lib
     (extractor.js:111-143).
     """
-    import pyspark.sql.functions as F
     from ..rules import arrange_links
 
     @F.pandas_udf(_RESULT_SCHEMA)

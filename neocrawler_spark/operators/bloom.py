@@ -25,7 +25,7 @@ indices with zero extra hashing — vectorized with numpy inside applyInPandas.
 
 from __future__ import annotations
 
-from typing import Iterator
+from typing import Any, Iterator, Tuple
 
 import numpy as np
 import pandas as pd
@@ -83,7 +83,7 @@ def update_shards(
         allowMissingColumns=True,
     )
 
-    def build(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def build(key: Tuple[Any, ...], pdf: pd.DataFrame) -> pd.DataFrame:
         bucket = int(key[0])
         existing = pdf[pdf.url_hash.isna()]
         hashes = pdf.url_hash.dropna()

@@ -17,16 +17,16 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, StringType
 
 from ..functions import multimodal
-from ..functions.canon import domain_udf, wash_links
-from ..functions.extract import regex_selector, sniff_charset
+from ..functions.canon import domain_of_host, wash_links
+from ..functions.extract import content_valid, regex_selector, sniff_charset
 from .analytics import ROUND_TS_MS, load
 from .scheduler import discovery_admit
 
 # --------------------------------------------------------------------------
 # 1. Bug-compatible top-level-domain reduction (scheduler/index.js:269-273,
 # extractor.js:49-54): split('.'), >2 labels -> drop ONLY the first label.
-# Spark side runs the production pUDF (canon.domain_udf: urlsplit host +
-# top_level_domain); oracle re-states the algorithm in SQL over the same
+# Spark side runs the JVM expression the round keys its metrics domain by
+# (canon.domain_of_host); oracle re-states the algorithm in SQL over the same
 # synthesized host shapes (1/2/3/5 labels).
 _HOST_CASE = """CASE c_custkey % 4
   WHEN 0 THEN 'c' || c_custkey || '.test'
@@ -36,13 +36,8 @@ _HOST_CASE = """CASE c_custkey % 4
 
 
 def q_tld_reduce(spark, sf_dir):
-    c = load(spark, sf_dir, "customer")
-    url = F.concat(F.lit("http://"), F.expr(_HOST_CASE), F.lit("/p/"), F.col("c_custkey"))
-    return c.select(
-        "c_custkey",
-        F.expr(_HOST_CASE).alias("host"),
-        domain_udf(url).alias("domain"),
-    )
+    c = load(spark, sf_dir, "customer").select("c_custkey", F.expr(_HOST_CASE).alias("host"))
+    return c.select("c_custkey", "host", domain_of_host(F.col("host")).alias("domain"))
 
 
 SQL_TLD_REDUCE = f"""
@@ -158,9 +153,9 @@ FROM documents
 
 # --------------------------------------------------------------------------
 # 5. Content validation predicate (extractor.js:392-414): length >= 500
-# (binary 20) AND every validation keyword present. Spark side is the exact
-# JVM expression the round uses (plans/round.py B2): length + forall/contains
-# — no Python in the hot path.
+# (binary 20) AND every validation keyword present. Spark side runs the
+# round's own validation expression (extract.content_valid): length +
+# forall/contains — no Python in the hot path.
 _KEYWORDS = ["table", "row"]
 
 
@@ -171,10 +166,7 @@ def q_content_validation(spark, sf_dir):
     kw_arr = F.when(has_kw, F.array(*[F.lit(k) for k in _KEYWORDS])).otherwise(
         F.array().cast("array<string>")
     )
-    valid = (
-        (F.length("text") >= F.when(is_binary, F.lit(20)).otherwise(F.lit(500)))
-        & F.forall(kw_arr, lambda k: F.col("text").contains(k))
-    )
+    valid = content_valid(F.col("text"), is_binary, kw_arr)
     return d.select("doc_id", valid.alias("valid"))
 
 

@@ -1,7 +1,8 @@
 """Operational tools mirroring the reference's tools/ + webconfig surface:
 
-* requeue_failures — tools/queue-helper.js:33-162: move fail:*/stuck: report
-  members back into their per-rule frontier queues.
+* requeue_failures — tools/queue-helper.js:33-162: move fail:* (and
+  incomplete:data:url) report members back into their per-rule frontier
+  queues.
 * monitor_summary — webconfig/controllers/monitor.js:75-125: link-db census
   (per-rule frontier sizes, scheduled backlog, url_info dbsize, daily
   counters with cross-domain totals :53-73).
@@ -35,23 +36,6 @@ def current_failures(fetch_log: DataFrame) -> DataFrame:
     )
 
 
-def current_stuck(fetch_log: DataFrame) -> DataFrame:
-    """The stuck set = urls whose LATEST event is a non-terminal 'retry'
-    (stuck:urllib:* analog, pipeline.js:269-290: recorded on sink failure,
-    zrem'd by crawled_finish on success). With atomic round commits the only
-    way to strand a retry is a halt — circuit breaker or crash — between the
-    retry event and its terminal outcome; this surfaces those for re-queue
-    (queue-helper.js:99-162 handles stuck: alongside fail:)."""
-    w = Window.partitionBy("url_hash").orderBy(F.desc("round"), F.desc("seq"))
-    return (
-        fetch_log.where(F.col("status").isin("fetched", "failed", "retry"))
-        .withColumn("rn", F.row_number().over(w))
-        .where("rn = 1")
-        .where(F.col("status") == "retry")
-        .drop("rn")
-    )
-
-
 def current_lack(fetch_log: DataFrame) -> DataFrame:
     """The live incomplete-data set = urls whose LATEST terminal outcome is a
     fetch with reason='data_lack' (the `incomplete:data:url` zset analog,
@@ -68,22 +52,17 @@ def current_lack(fetch_log: DataFrame) -> DataFrame:
     )
 
 
-def requeue_candidates(fetch_log: DataFrame, include_stuck: bool = True,
-                       include_lack: bool = False,
+def requeue_candidates(fetch_log: DataFrame, include_lack: bool = False,
                        include_fail: bool = True) -> DataFrame:
-    """fail set ∪ stuck set (∪ data-lack set), one row per url_hash. A url
-    whose log ends [..., failed, retry] (requeued failure crashed mid-retry)
-    is in BOTH the fail and stuck sets — latest terminal = failed, latest
-    overall = retry — so the union dedupes on url_hash (r2 ADVICE: the raw
-    union double-requeued it). include_lack mirrors queue-helper's
+    """fail set (∪ data-lack set), one row per url_hash: both sets read a
+    url's LATEST fetched/failed event, which is either 'failed' or
+    'fetched', so no url is in both. include_lack mirrors queue-helper's
     incomplete:data:url re-queue (tools/queue-helper.js:99-162);
-    include_fail=False selects the stuck/lack sets alone (the driver loop's
+    include_fail=False selects the lack set alone (the driver loop's
     requeue_lack policy re-queues ONLY incomplete pages each round)."""
     parts = []
     if include_fail:
         parts.append(current_failures(fetch_log))
-    if include_stuck:
-        parts.append(current_stuck(fetch_log))
     if include_lack:
         parts.append(current_lack(fetch_log))
     if not parts:
@@ -91,23 +70,18 @@ def requeue_candidates(fetch_log: DataFrame, include_stuck: bool = True,
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
-    if len(parts) > 1:
-        out = out.dropDuplicates(["url_hash"])
     return out
 
 
 def requeue_failures(spark: SparkSession, catalog: Catalog, buckets: int = 64,
-                     include_stuck: bool = True, include_lack: bool = False,
-                     include_fail: bool = True) -> int:
-    """Append the live fail set (and, like the reference's queue helper, the
-    stuck set) back into the frontier (queue-helper re-queue). Returns the
-    number of re-queued URLs. Resets their url_state status to 'hit' so the
-    scheduler window re-admits them (the reference clears the zset and
-    rpushes into urllib:*)."""
-    from ..functions import canon
-
+                     include_lack: bool = False, include_fail: bool = True) -> int:
+    """Append the live fail set (and, with include_lack, the data-lack set)
+    back into the frontier (queue-helper re-queue). Returns the number of
+    re-queued URLs. Resets their url_state status to 'hit' so the scheduler
+    window re-admits them (the reference clears the zset and rpushes into
+    urllib:*)."""
     flog = catalog.read(spark, "fetch_log", schema.FETCH_LOG)
-    fails = requeue_candidates(flog, include_stuck, include_lack, include_fail)
+    fails = requeue_candidates(flog, include_lack, include_fail)
     frontier = catalog.read(spark, "frontier", schema.FRONTIER)
     url_state = catalog.read(spark, "url_state", schema.URL_STATE)
 

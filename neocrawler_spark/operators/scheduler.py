@@ -232,3 +232,9 @@ def robots_allowed(url_col: Column, host_col: Column, disallow_col: Column) -> C
     ).otherwise(
         ~F.exists(disallow_col, lambda p: path.startswith(p))
     )
+
+
+def ring3(col: Column) -> Column:
+    """records.slice(-3) — keep the last ≤3 entries of a url_state records
+    array (scheduler/index.js:434)."""
+    return F.when(F.size(col) <= 3, col).otherwise(F.slice(col, -3, 3))

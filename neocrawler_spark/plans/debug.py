@@ -11,7 +11,7 @@ from pathlib import Path
 
 from pyspark.sql import functions as F
 
-from ..functions.extract import process_document
+from ..functions.extract import process_document, validate_content
 from ..rules import arrange_links, detect_link
 
 
@@ -28,9 +28,8 @@ def test_url(ctx, url: str, out_dir: str | Path | None = None) -> dict:
     if not row:
         return {"url": url, "rule": rule["key"], "error": "not in corpus (fetch failure)"}
     html = bytes(row[0]["html"]).decode(rule.get("encoding") or "utf-8", errors="replace")
-    valid = len(html) >= 500 and all(
-        kw in html for kw in (rule.get("validation_keywords") or [])
-    )
+    valid = validate_content(200, html, rule["format"] == "binary",
+                             rule.get("validation_keywords"))
     res = process_document(url, html, rule, "*", ctx.settings.get("keep_link_relation", True))
     doc = {
         "url": url,

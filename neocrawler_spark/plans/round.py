@@ -46,7 +46,7 @@ from pyspark.sql import functions as F
 
 from .. import schema
 from ..functions import canon
-from ..functions.extract import extract_udf
+from ..functions.extract import content_valid, extract_udf
 from ..operators import bloom
 from ..operators.scheduler import (
     consume_quota,
@@ -54,6 +54,7 @@ from ..operators.scheduler import (
     per_host_budget,
     pop_order,
     quota_cts,
+    ring3,
     robots_allowed,
     scheduler_admit,
 )
@@ -240,11 +241,6 @@ def load_state(cat: Catalog) -> dict:
 
 def _ev(events: list[str]):
     return F.array(*[F.lit(e) for e in events])
-
-
-def _ring3(col):
-    """records.slice(-3) — keep the last ≤3 entries (scheduler/index.js:434)."""
-    return F.when(F.size(col) <= 3, col).otherwise(F.slice(col, -3, 3))
 
 
 @dataclass
@@ -699,10 +695,7 @@ def fetch_extract(ctx: CrawlContext, rnd: _Round, batch: DataFrame, n_seeds: int
         .withColumn(
             "valid",
             F.col("html").isNotNull()
-            & (F.length("content")
-               >= F.when(F.col("is_binary"), F.lit(20)).otherwise(F.lit(500)))
-            & F.forall(F.coalesce(F.col("keywords"), EMPTY_ARR()),
-                       lambda k: F.col("content").contains(k)),
+            & content_valid(F.col("content"), F.col("is_binary"), F.col("keywords")),
         )
     )
 
@@ -910,8 +903,8 @@ def merge(ctx: CrawlContext, rnd: _Round, out: _Outcomes, pe: DataFrame):
         .unionByName(
             out.failed.select(
                 "url_hash",
-                _ring3(F.concat(F.array_repeat(F.lit("crawling"), attempts),
-                                _ev(["crawled_failure"]))).alias("crawl_events"),
+                ring3(F.concat(F.array_repeat(F.lit("crawling"), attempts),
+                               _ev(["crawled_failure"]))).alias("crawl_events"),
             )
         )
         .unionByName(out.denied.select("url_hash",
@@ -996,8 +989,8 @@ def merge(ctx: CrawlContext, rnd: _Round, out: _Outcomes, pe: DataFrame):
             .otherwise(F.coalesce(F.try_element_at("u.events", F.lit(-1)), "u.n_status", "s.status"))
             .alias("status"),
             F.when(F.col("u.n_status").isNotNull(),
-                   _ring3(F.coalesce("u.events", EMPTY_ARR())))
-            .otherwise(_ring3(
+                   ring3(F.coalesce("u.events", EMPTY_ARR())))
+            .otherwise(ring3(
                 F.concat(F.coalesce("s.records", EMPTY_ARR()),
                          F.coalesce("u.events", EMPTY_ARR()))))
             .alias("records"),
@@ -1059,7 +1052,7 @@ def _fetch_log_frame(rnd: _Round, out: _Outcomes) -> DataFrame:
     return (
         flog
         .withColumn("p_status", F.col("status"))
-        .withColumn("p_domain", F.coalesce(_domain_expr(), F.lit("")))
+        .withColumn("p_domain", F.coalesce(canon.domain_of_host(F.col("host")), F.lit("")))
     )
 
 
@@ -1302,12 +1295,3 @@ def _yyyymmdd(ts_ms: int) -> str:
     return datetime.datetime.fromtimestamp(
         ts_ms / 1000, tz=datetime.timezone.utc
     ).strftime("%Y%m%d")
-
-
-def _domain_expr():
-    """Bug-compatible TLD of host (metrics key {metric}:{domain},
-    spider_extend.js:97-169)."""
-    parts = F.split(F.col("host"), r"\.")
-    return F.when(F.size(parts) <= 2, F.col("host")).otherwise(
-        F.array_join(F.slice(parts, 2, 1_000), ".")
-    )

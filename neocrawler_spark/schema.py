@@ -118,7 +118,7 @@ CRAWLED = T.StructType(
 )
 
 # ---------------------------------------------------------------- fetch_log
-# Mirrors fail:/stuck: zsets + per-URL outcomes
+# Mirrors the fail: zset + per-URL outcomes
 # (/root/reference/spider/spider.js:367, /root/reference/spider/pipeline.js:269-279).
 FETCH_LOG = T.StructType(
     [
@@ -127,8 +127,8 @@ FETCH_LOG = T.StructType(
         T.StructField("url_hash", T.StringType(), False),
         T.StructField("url", T.StringType(), False),
         T.StructField("host", T.StringType(), True),
-        T.StructField("status", T.StringType(), False),
-        # fetched | http_error | invalid_content | missing | retry | failed | robots_denied | over_budget
+        T.StructField("status", T.StringType(), False),  # fetched | failed | robots_denied
+        # data_lack (fetched) | missing | invalid_content (failed) | robots (robots_denied)
         T.StructField("reason", T.StringType(), True),
         T.StructField("ts", T.LongType(), True),
     ]

@@ -39,7 +39,7 @@ def run_rounds(ctx: CrawlContext, n_rounds: int, verbose: bool = False) -> list[
 
             requeue_failures(
                 ctx.spark, ctx.catalog, buckets=ctx.settings["buckets"],
-                include_fail=False, include_stuck=False, include_lack=True,
+                include_fail=False, include_lack=True,
             )
         rec = ctx.catalog.last_completed_round()
         m = rec["metrics"]["round_metrics"]

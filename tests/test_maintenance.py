@@ -52,7 +52,7 @@ def test_daily_counters_rollup(ctx):
 
 def test_requeue_failures_and_current_failures(ctx):
     flog = ctx.catalog.read(ctx.spark, "fetch_log", schema.FETCH_LOG)
-    fails_now = mt.current_failures(flog).count() + mt.current_stuck(flog).count()
+    fails_now = mt.current_failures(flog).count()
     n = mt.requeue_failures(ctx.spark, ctx.catalog, buckets=4)
     assert n == fails_now  # none were already queued
     if n:
@@ -85,6 +85,27 @@ def test_debug_single_url(ctx, tmp_path):
     assert debug_url(ctx, "http://nope.example/x")["error"] == "no rule matches"
 
 
+def test_debug_binary_rule_uses_binary_limit(spark, tmp_path):
+    """A binary rule validates at 20 characters, not 500: a 100-byte page
+    that the round fetches is valid in the debug document too."""
+    url = "http://www.bin.test/weixin_1.html"
+    rule = {
+        "domain": "bin.test", "alias": "page",
+        "url_pattern": r"weixin_[0-9]+\.html",
+        "type": "node", "format": "binary",
+        "priority": 1, "weight": 10, "schedule_interval": 86400,
+        "active": True, "seed": [url], "schedule_rule": "FIFO",
+        "drill_rules": [], "extract_rule": {},
+    }
+    pages = spark.createDataFrame([(url, None, b"b" * 100, "t", "en")], schema.PAGES)
+    c = CrawlContext(spark, Catalog(tmp_path / "wh"), load_rules([rule]), pages, None,
+                     settings={"buckets": 4, "bloom_keys_per_bucket": 100})
+    run_rounds(c, 1)
+    flog = c.catalog.read(spark, "fetch_log", schema.FETCH_LOG)
+    assert [r["status"] for r in flog.collect()] == ["fetched"]
+    assert debug_url(c, url)["valid"]
+
+
 def test_rules_hot_reload(tmp_path):
     rules = synth.gen_rules(PARAMS)
     p = tmp_path / "rules.json"
@@ -102,39 +123,23 @@ def test_rules_hot_reload(tmp_path):
     assert any(r["weight"] == 99 for r in re_loaded)
 
 
-def test_current_stuck_latest_retry_only(spark):
-    """stuck = latest event is a non-terminal retry; a later fetched/failed
-    outcome clears it (zrem analog)."""
+def test_current_failures_latest_outcome_only(spark):
+    """fail set = urls whose latest fetched/failed event is 'failed'; a later
+    fetch clears it (zrem analog), and robots denials do not count."""
     rows = [
-        # u1: retry then fetched -> not stuck
-        (1, 10, "u1", "http://a/1", "a", "retry", None, 0),
+        # u1: failed then fetched -> cleared
+        (1, 10, "u1", "http://a/1", "a", "failed", "missing", 0),
         (2, 20, "u1", "http://a/1", "a", "fetched", None, 0),
-        # u2: retry then failed -> not stuck (it's a failure instead)
-        (1, 11, "u2", "http://a/2", "a", "retry", None, 0),
+        # u2: fetched then failed -> a failure
+        (1, 11, "u2", "http://a/2", "a", "fetched", None, 0),
         (2, 21, "u2", "http://a/2", "a", "failed", "missing", 0),
-        # u3: fetched then retry (recrawl gone bad, halt) -> stuck
+        # u3: fetched then robots-denied -> latest outcome is still the fetch
         (1, 12, "u3", "http://a/3", "a", "fetched", None, 0),
-        (3, 30, "u3", "http://a/3", "a", "retry", None, 0),
+        (3, 30, "u3", "http://a/3", "a", "robots_denied", "robots", 0),
     ]
     flog = spark.createDataFrame(rows, schema.FETCH_LOG)
-    stuck = [r["url_hash"] for r in mt.current_stuck(flog).collect()]
-    assert stuck == ["u3"]
     fails = [r["url_hash"] for r in mt.current_failures(flog).collect()]
     assert fails == ["u2"]
-
-
-def test_requeue_candidates_dedupes_failed_then_retry(spark):
-    """A url whose log ends [failed, retry] sits in BOTH the fail and stuck
-    sets; requeue_candidates must emit it exactly once (r2 ADVICE)."""
-    rows = [
-        (1, 10, "u1", "http://a/1", "a", "failed", "missing", 0),
-        (2, 20, "u1", "http://a/1", "a", "retry", None, 0),
-        # control: plain failure, appears once
-        (1, 11, "u2", "http://a/2", "a", "failed", "missing", 0),
-    ]
-    flog = spark.createDataFrame(rows, schema.FETCH_LOG)
-    cand = mt.requeue_candidates(flog).collect()
-    assert sorted(r["url_hash"] for r in cand) == ["u1", "u2"]
 
 
 def test_requeue_data_lack_refetches(spark, tmp_path):
