@@ -64,7 +64,7 @@ def _crawl_round_smoke(spark: SparkSession, sf_dir: str) -> DataFrame:
     ctx = CrawlContext(
         spark, cat, load_rules(synth.gen_rules(params)), pages,
         synth.gen_robots_df(spark, params),
-        settings={"buckets": 4, "bloom_keys_per_bucket": 100},
+        settings={"buckets": 4},
     )
     run_rounds(ctx, 3)
     flog = cat.read(spark, "fetch_log", schema.FETCH_LOG)

@@ -3,10 +3,10 @@
 A from-scratch, Spark-first re-implementation of the query and data-processing
 capabilities of ahkimkoo/neocrawler (reference at /root/reference, a Node.js +
 Redis/SSDB crawler).  Nothing here is a port: the reference's per-URL Redis
-chatter becomes columnar DataFrame jobs; its Redis seen-set becomes a
-partitioned Bloom prefilter + exact anti-join; its priority/quota loop becomes
-a window-function top-k; its cheerio/regex extraction rules become vectorized
-pandas UDFs.
+chatter becomes columnar DataFrame jobs; its Redis seen-set becomes
+per-bucket Bloom shards that tag each discovered link + an exact join against
+url_state; its priority/quota loop becomes a window-function top-k; its
+cheerio/regex extraction rules become vectorized pandas UDFs.
 
 Layout:
   functions/  — scalar/batch functions (URL canon, CSS engine, extraction,

@@ -157,16 +157,16 @@ def canonicalize_udf(id_param_by_rule: dict[str, list[str] | None]):
 # ------------------------------------------------------------ column helpers
 
 
-def with_url_identity(df, url_col: str = "url", buckets: int = 4096):
-    """Append url_hash (JVM md5) + bucket columns. Bucket = first 3 hex chars
-    mod buckets — cheap, uniform, and computable from the hash alone so both
-    sides of any state join bucket identically."""
-    return df.withColumn("url_hash", F.md5(F.col(url_col))).withColumn(
+def with_url_identity(df, buckets: int):
+    """Append url_hash (JVM md5 of `url`) + bucket columns. Bucket = first 3
+    hex chars mod buckets — cheap, uniform, and computable from the hash
+    alone so both sides of any state join bucket identically."""
+    return df.withColumn("url_hash", F.md5(F.col("url"))).withColumn(
         "bucket", bucket_of_hash(buckets)
     )
 
 
-def bucket_of_hash(buckets: int = 4096):
+def bucket_of_hash(buckets: int):
     return (F.conv(F.substring("url_hash", 1, 3), 16, 10).cast("int") % F.lit(buckets)).cast("int")
 
 

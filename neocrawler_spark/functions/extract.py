@@ -306,6 +306,13 @@ def sniff_charset(head: bytes, default: str = "utf-8") -> str:
     return enc
 
 
+def decode_page(raw: bytes, rule: dict) -> str:
+    """A fetched page's text as extraction sees it: the rule's encoding wins
+    (spider.js applies the rule's `encoding`); no declared encoding ->
+    sniff (downloader.js:213-233 analog)."""
+    return raw.decode(rule.get("encoding") or sniff_charset(raw), errors="replace")
+
+
 # ------------------------------------------------------------ Spark UDF
 
 _RESULT_SCHEMA = (
@@ -343,11 +350,7 @@ def extract_udf(
                              "drill_relation": None, "lacks": []})
                 continue
             if isinstance(html, (bytes, bytearray)):
-                raw = bytes(html)
-                # rule encoding wins (spider.js applies the rule's `encoding`);
-                # no declared encoding -> sniff (downloader.js:213-233 analog)
-                enc = rule.get("encoding") or sniff_charset(raw)
-                html = raw.decode(enc, errors="replace")
+                html = decode_page(bytes(html), rule)
             res = process_document(url, html, rule, orel, keep_link_relation)
             arranged = [
                 {"lib": lib, "link": link, "host": url_host(link)}

@@ -2,21 +2,21 @@
 
 Replaces the reference's Redis url_info existence probe
 (/root/reference/spider/pipeline.js:119-125 — one hgetall per discovered
-link) with a two-stage membership test that scales to a 10^10-URL frontier:
-
-  1. probe the per-bucket Bloom shard (cheap, local after a bucket-equi
-     broadcast/shuffle): "definitely new" URLs skip the expensive state join
-     entirely — on a converged crawl that's the vast majority of discovered
-     links eliminated without touching url_state;
-  2. "maybe seen" URLs (Bloom positives incl. false positives) are confirmed
-     with an EXACT join against url_state — a false positive can therefore
-     never drop a URL, only cost one extra lookup (SURVEY.md §4 watch-list).
+link) with a per-bucket Bloom filter over url_state's keys. The round's
+discovery probe (`probe`) tags every candidate link with `maybe_seen`; `pe`
+then left-joins url_state for every candidate and trusts a state row only
+where `maybe_seen` holds. A filter has no false negatives, so its
+false-positive rate moves no output. The filter does not yet prune the
+state join (ROADMAP item 2).
 
 Shard layout: one row per bucket `(bucket, m, k, n_items, bits binary)` in
 the snapshot catalog. Bucket = same function as url_state partitioning, so
-probe and state join share co-location. Sizing: DEFAULT_BITS_PER_KEY≈12 →
-~1% FP. At 10^10 keys / 4096 buckets that's ~3.7 MB/shard, ~15 GB total —
-held as table files, never driver-side.
+probe and state join share co-location. Each commit rebuilds the shards of
+the buckets that gained keys from every key the bucket holds
+(`build_shards`) at 12 bits per key with k = 7 hashes: a fill of ~0.44 and
+an estimated false-positive rate of ~0.3%, whatever the bucket's size. At
+10^10 keys / 4096 buckets that's ~3.7 MB/shard, ~15 GB total — held as
+table files, never driver-side.
 
 Hashing: the url_hash IS md5 hex (computed once, JVM-side). Kirsch-
 Mitzenmacher double hashing over its two 64-bit halves gives k independent
@@ -25,12 +25,11 @@ indices with zero extra hashing — vectorized with numpy inside applyInPandas.
 
 from __future__ import annotations
 
-from typing import Any, Iterator, Tuple
+from typing import Any, Tuple
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 BLOOM_SCHEMA = T.StructType(
@@ -43,8 +42,8 @@ BLOOM_SCHEMA = T.StructType(
     ]
 )
 
-DEFAULT_BITS_PER_KEY = 12
-DEFAULT_K = 7
+BITS_PER_KEY = 12
+K = 7
 
 
 def _halves(url_hashes: pd.Series) -> tuple[np.ndarray, np.ndarray]:
@@ -57,56 +56,35 @@ def _indices(h1: np.ndarray, h2: np.ndarray, i: int, m: int) -> np.ndarray:
     return (h1 + np.uint64(i) * h2) % np.uint64(m)
 
 
-def shard_size_bits(expected_keys_per_bucket: int) -> int:
-    m = max(1024, expected_keys_per_bucket * DEFAULT_BITS_PER_KEY)
-    return int(m)
+def shard_size_bits(n_keys: int) -> int:
+    return max(1024, BITS_PER_KEY * n_keys)
 
 
-def update_shards(
-    spark: SparkSession,
-    shards: DataFrame,
-    new_hashes: DataFrame,
-    expected_keys_per_bucket: int = 100_000,
-) -> DataFrame:
-    """Merge new url_hashes into their bucket shards. Only touched buckets
-    are produced — the caller commits with mode='overwrite-partitions' so
-    untouched shard files carry over by reference.
+def build_shards(keys: DataFrame) -> DataFrame:
+    """Build one shard per bucket of keys(url_hash string, bucket int) from
+    exactly that bucket's keys: m = shard_size_bits(n), k = K, n_items = n.
+    The caller passes every key each bucket holds, and commits
+    with mode='overwrite-partitions' so the shards of other buckets carry
+    over by reference. A bucket's keys are one pandas frame in the worker,
+    the same bound as `probe`'s candidate groups.
 
-    new_hashes: DataFrame(url_hash string, bucket int).
-    Returns: DataFrame[BLOOM_SCHEMA] covering exactly the touched buckets.
+    Returns: DataFrame[BLOOM_SCHEMA] covering exactly the buckets in keys.
     """
-    m_default = shard_size_bits(expected_keys_per_bucket)
-    joined = new_hashes.select("bucket", "url_hash").unionByName(
-        shards.join(
-            new_hashes.select("bucket").distinct(), "bucket", "left_semi"
-        ).select("bucket", F.lit(None).cast("string").alias("url_hash"), "m", "k", "n_items", "bits"),
-        allowMissingColumns=True,
-    )
 
     def build(key: Tuple[Any, ...], pdf: pd.DataFrame) -> pd.DataFrame:
-        bucket = int(key[0])
-        existing = pdf[pdf.url_hash.isna()]
-        hashes = pdf.url_hash.dropna()
-        if len(existing):
-            m = int(existing.m.iloc[0])
-            k = int(existing.k.iloc[0])
-            n = int(existing.n_items.iloc[0])
-            bits = np.frombuffer(existing.bits.iloc[0], dtype=np.uint8).copy()
-        else:
-            m, k, n = m_default, DEFAULT_K, 0
-            bits = np.zeros((m + 7) // 8, dtype=np.uint8)
-        if len(hashes):
-            h1, h2 = _halves(hashes)
-            for i in range(k):
-                idx = _indices(h1, h2, i, m)
-                np.bitwise_or.at(bits, (idx >> np.uint64(3)).astype(np.int64),
-                                 (1 << (idx & np.uint64(7))).astype(np.uint8))
-            n += len(hashes)
-        return pd.DataFrame(
-            [{"bucket": bucket, "m": m, "k": k, "n_items": n, "bits": bits.tobytes()}]
-        )
+        n = len(pdf)
+        m = shard_size_bits(n)
+        bits = np.zeros((m + 7) // 8, dtype=np.uint8)
+        h1, h2 = _halves(pdf.url_hash)
+        for i in range(K):
+            idx = _indices(h1, h2, i, m)
+            np.bitwise_or.at(bits, (idx >> np.uint64(3)).astype(np.int64),
+                             (1 << (idx & np.uint64(7))).astype(np.uint8))
+        return pd.DataFrame([{"bucket": int(key[0]), "m": m, "k": K,
+                              "n_items": n, "bits": bits.tobytes()}])
 
-    return joined.groupBy("bucket").applyInPandas(build, schema=BLOOM_SCHEMA)
+    return (keys.select("bucket", "url_hash").groupBy("bucket")
+            .applyInPandas(build, schema=BLOOM_SCHEMA))
 
 
 def probe(candidates: DataFrame, shards: DataFrame) -> DataFrame:
@@ -117,9 +95,11 @@ def probe(candidates: DataFrame, shards: DataFrame) -> DataFrame:
     boundary exactly ONCE per bucket-group — never joined onto candidate
     rows (a bits-per-row join would ship |candidates| × shard_size bytes;
     at 10^10-frontier shard sizes that dwarfs the candidates themselves).
-    Rows in buckets with no shard yet are definitely new. Bucket = the
-    url_state partition function, so this shuffle is the same co-location
-    the exact-confirm join uses.
+    Rows in buckets with no shard yet hold no seen key, so they probe
+    negative. A positive is only "maybe seen": the round's `pe` stage
+    left-joins url_state for every candidate and keeps the state row where
+    maybe_seen holds. Bucket = the url_state partition function, so this
+    shuffle is the same co-location that join uses.
 
     Memory: applyInPandas materializes each bucket's candidate group as one
     pandas frame in the worker, so the bucket count must be sized such that

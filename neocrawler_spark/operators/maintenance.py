@@ -73,7 +73,7 @@ def requeue_candidates(fetch_log: DataFrame, include_lack: bool = False,
     return out
 
 
-def requeue_failures(spark: SparkSession, catalog: Catalog, buckets: int = 64,
+def requeue_failures(spark: SparkSession, catalog: Catalog,
                      include_lack: bool = False, include_fail: bool = True) -> int:
     """Append the live fail set (and, with include_lack, the data-lack set)
     back into the frontier (queue-helper re-queue). Returns the number of

@@ -11,7 +11,7 @@ from pathlib import Path
 
 from pyspark.sql import functions as F
 
-from ..functions.extract import process_document, validate_content
+from ..functions.extract import decode_page, process_document, validate_content
 from ..rules import arrange_links, detect_link
 
 
@@ -27,9 +27,13 @@ def test_url(ctx, url: str, out_dir: str | Path | None = None) -> dict:
     row = ctx.pages.where(F.col("url") == url).select("html").limit(1).collect()
     if not row:
         return {"url": url, "rule": rule["key"], "error": "not in corpus (fetch failure)"}
-    html = bytes(row[0]["html"]).decode(rule.get("encoding") or "utf-8", errors="replace")
-    valid = validate_content(200, html, rule["format"] == "binary",
-                             rule.get("validation_keywords"))
+    raw = bytes(row[0]["html"])
+    # validation reads the page as the round's JVM check does (rule
+    # encoding or utf-8); extraction decodes it as the round's UDF does
+    valid = validate_content(
+        200, raw.decode(rule.get("encoding") or "utf-8", errors="replace"),
+        rule["format"] == "binary", rule.get("validation_keywords"))
+    html = decode_page(raw, rule)
     res = process_document(url, html, rule, "*", ctx.settings.get("keep_link_relation", True))
     doc = {
         "url": url,

@@ -89,7 +89,6 @@ DEFAULT_SETTINGS = {
     "save_content": True,
     "buckets": 64,
     "default_host_budget": 1 << 30,
-    "bloom_keys_per_bucket": 100_000,
 }
 
 def EMPTY_ARR():  # must be lazy: Column construction needs an active session
@@ -1063,7 +1062,7 @@ def commit(ctx: CrawlContext, rnd: _Round, out: _Outcomes,
     footer-derived metrics. Atomicity: the round record that run_round
     writes afterwards is the only commit point readers trust for resume.
     Returns (snapshot ids, round metrics)."""
-    spark, cat, st, round_no = ctx.spark, ctx.catalog, ctx.settings, rnd.no
+    spark, cat, round_no = ctx.spark, ctx.catalog, rnd.no
     crawled = _crawled_frame(ctx, rnd, out.ex)
     # $category routing (pipeline.js:275: extracted_data['$category'] redirects
     # the HBase table). Category values are rule config, not data — derived
@@ -1108,17 +1107,19 @@ def commit(ctx: CrawlContext, rnd: _Round, out: _Outcomes,
                                 round_no=round_no)
 
     flog_partitioned = _fetch_log_frame(rnd, out)
-    # bloom's replaced-partition set is ONLY buckets holding new hashes —
-    # url_state may touch more buckets (status-only updates) whose shards
-    # must carry over untouched. new_hashes re-reads the staged updates
-    # (is_new partition pruning), bloom_touched comes from the dir listing.
-    new_hashes = updates.where("is_new = 1").select(
-        "url_hash", F.col("u_bucket").cast("int").alias("bucket")
-    )
-    shards_new = bloom.update_shards(spark, rnd.shards, new_hashes,
-                                     st["bloom_keys_per_bucket"])
+    # bloom rebuilds ONLY the buckets that gained keys — url_state may touch
+    # more buckets (status-only updates) whose shards carry over untouched.
+    # A rebuilt shard holds every key of its bucket: the pre-round url_state
+    # keys plus the new hashes re-read from the staged updates (is_new
+    # partition pruning); bloom_touched comes from the dir listing.
     touched_buckets = sorted({int(p["u_bucket"]) for p in parts})
     bloom_touched = sorted({int(p["u_bucket"]) for p in parts if int(p["is_new"]) == 1})
+    shards_new = bloom.build_shards(
+        rnd.url_state.where(F.col("bucket").isin(bloom_touched))
+        .select("url_hash", "bucket")
+        .unionByName(updates.where("is_new = 1").select(
+            "url_hash", F.col("u_bucket").cast("int").alias("bucket")))
+    )
 
     def _commit_frontier():
         # surviving (unpopped) frontier rows: ADOPT the fr2 stage's

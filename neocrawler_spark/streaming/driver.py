@@ -37,10 +37,8 @@ def run_rounds(ctx: CrawlContext, n_rounds: int, verbose: bool = False) -> list[
         if ctx.settings.get("requeue_lack"):
             from ..operators.maintenance import requeue_failures
 
-            requeue_failures(
-                ctx.spark, ctx.catalog, buckets=ctx.settings["buckets"],
-                include_fail=False, include_lack=True,
-            )
+            requeue_failures(ctx.spark, ctx.catalog,
+                             include_fail=False, include_lack=True)
         rec = ctx.catalog.last_completed_round()
         m = rec["metrics"]["round_metrics"]
         m["wall_s"] = time.time() - t0

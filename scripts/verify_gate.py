@@ -102,7 +102,7 @@ def main():
         ctx = CrawlContext(spark, cat, load_rules(synth.gen_rules(params)),
                            synth.gen_pages_df(spark, params),
                            synth.gen_robots_df(spark, params),
-                           settings={"buckets": 4, "bloom_keys_per_bucket": 200})
+                           settings={"buckets": 4})
         run_rounds(ctx, 2)
         flog = cat.read(spark, "fetch_log", schema.FETCH_LOG)
         nf = flog.count()

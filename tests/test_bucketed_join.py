@@ -55,7 +55,7 @@ def test_bucketed_crawl_bit_identical(spark, tmp_path, monkeypatch):
         cat = Catalog(tmp_path / sub)
         ctx = CrawlContext(spark, cat, rules, pages,
                            synth.gen_robots_df(spark, PARAMS),
-                           settings={"buckets": 4, "bloom_keys_per_bucket": 200})
+                           settings={"buckets": 4})
         run_rounds(ctx, 2)
         return sorted(
             (r["round"], r["seq"], r["url"], r["status"], r["reason"])

@@ -28,8 +28,7 @@ def make_ctx(spark, tmp_path, sub="wh", limit=500):
     robots = synth.gen_robots_df(spark, PARAMS)
     return CrawlContext(
         spark, cat, rules, pages, robots,
-        settings={"schedule_quantity_limitation": limit, "buckets": 8,
-                  "bloom_keys_per_bucket": 1000},
+        settings={"schedule_quantity_limitation": limit, "buckets": 8},
     )
 
 
@@ -138,12 +137,21 @@ def test_robots_disallow_never_fetched(crawled_ctx):
 
 
 def test_bloom_covers_url_state(crawled_ctx):
-    """Every url_state hash must probe positive (no false negatives ever)."""
+    """Every url_state hash must probe positive (no false negatives ever),
+    and each bucket's shard is the filter of exactly that bucket's keys:
+    one shard per bucket, n_items = the bucket's rows, m sized from it."""
     ctx, _ = crawled_ctx
     us = table(ctx, "url_state", schema.URL_STATE)
     shards = table(ctx, "bloom", bloom.BLOOM_SCHEMA)
     probed = bloom.probe(us.select("url_hash", "bucket"), shards)
     assert probed.where(~F.col("maybe_seen")).count() == 0
+
+    rows = {r["bucket"]: r["count"] for r in us.groupBy("bucket").count().collect()}
+    meta = shards.select("bucket", "m", "n_items").collect()
+    assert sorted(r["bucket"] for r in meta) == sorted(rows)
+    for r in meta:
+        assert r["n_items"] == rows[r["bucket"]]
+        assert r["m"] == bloom.shard_size_bits(r["n_items"])
 
 
 def test_rerun_determinism(spark, tmp_path):

@@ -8,6 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from neocrawler_spark import schema, synth
+from neocrawler_spark.plans.debug import test_url as debug_url
 from neocrawler_spark.plans.round import CircuitBreakerTripped, CrawlContext
 from neocrawler_spark.rules import load_rules
 from neocrawler_spark.sources.tables import Catalog
@@ -26,7 +27,7 @@ def make_ctx(spark, tmp_path, sub, **kw):
     return CrawlContext(
         spark, cat, rules, pages, synth.gen_robots_df(spark, PARAMS),
         settings={"schedule_quantity_limitation": 500, "buckets": 4,
-                  "bloom_keys_per_bucket": 500, **kw.pop("settings", {})},
+                  **kw.pop("settings", {})},
         **kw,
     )
 
@@ -138,6 +139,8 @@ def test_charset_sniff_gbk(spark, tmp_path):
     rows = crawled.collect()
     assert len(rows) == 1
     assert rows[0]["extracted"]["body"] == golden  # byte-exact decode
+    # the debug document decodes the page as the round does
+    assert debug_url(ctx, url)["extracted_data"]["body"] == golden
 
 
 # ------------------------------------------------------------ circuit breaker
@@ -170,8 +173,7 @@ def test_stale_trace_redetect_on_pop(spark, tmp_path):
     rules1 = load_rules(synth.gen_rules(PARAMS))
     pages = synth.gen_pages_df(spark, PARAMS)
     robots = synth.gen_robots_df(spark, PARAMS)
-    common = {"schedule_quantity_limitation": 500, "buckets": 4,
-              "bloom_keys_per_bucket": 500}
+    common = {"schedule_quantity_limitation": 500, "buckets": 4}
     ctx1 = CrawlContext(spark, cat, rules1, pages, robots, settings=dict(common))
     # stop after ONE round: the home fetch discovered list+detail links that
     # now sit un-popped in the frontier under the about-to-die rule keys

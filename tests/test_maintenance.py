@@ -27,7 +27,7 @@ def ctx(spark, tmp_path_factory):
     c = CrawlContext(
         spark, Catalog(tmp_path_factory.mktemp("mt") / "wh"), rules,
         pages, synth.gen_robots_df(spark, PARAMS),
-        settings={"buckets": 4, "bloom_keys_per_bucket": 200},
+        settings={"buckets": 4},
     )
     run_rounds(c, 3)
     return c
@@ -53,7 +53,7 @@ def test_daily_counters_rollup(ctx):
 def test_requeue_failures_and_current_failures(ctx):
     flog = ctx.catalog.read(ctx.spark, "fetch_log", schema.FETCH_LOG)
     fails_now = mt.current_failures(flog).count()
-    n = mt.requeue_failures(ctx.spark, ctx.catalog, buckets=4)
+    n = mt.requeue_failures(ctx.spark, ctx.catalog)
     assert n == fails_now  # none were already queued
     if n:
         fr = ctx.catalog.read(ctx.spark, "frontier", schema.FRONTIER)
@@ -99,7 +99,7 @@ def test_debug_binary_rule_uses_binary_limit(spark, tmp_path):
     }
     pages = spark.createDataFrame([(url, None, b"b" * 100, "t", "en")], schema.PAGES)
     c = CrawlContext(spark, Catalog(tmp_path / "wh"), load_rules([rule]), pages, None,
-                     settings={"buckets": 4, "bloom_keys_per_bucket": 100})
+                     settings={"buckets": 4})
     run_rounds(c, 1)
     flog = c.catalog.read(spark, "fetch_log", schema.FETCH_LOG)
     assert [r["status"] for r in flog.collect()] == ["fetched"]
@@ -163,15 +163,15 @@ def test_requeue_data_lack_refetches(spark, tmp_path):
     pages = spark.createDataFrame([(url, None, html, "t", "en")], schema.PAGES)
     cat = Catalog(tmp_path / "wh")
     c = CrawlContext(spark, cat, load_rules([rule]), pages, None,
-                     settings={"buckets": 4, "bloom_keys_per_bucket": 100})
+                     settings={"buckets": 4})
     run_rounds(c, 1)
     flog = cat.read(spark, "fetch_log", schema.FETCH_LOG)
     assert [r["reason"] for r in flog.collect()] == ["data_lack"]
 
     # not a failure: the default requeue ignores it
-    assert mt.requeue_failures(spark, cat, buckets=4) == 0
+    assert mt.requeue_failures(spark, cat) == 0
     # the data-lack requeue re-queues it
-    assert mt.requeue_failures(spark, cat, buckets=4, include_lack=True) == 1
+    assert mt.requeue_failures(spark, cat, include_lack=True) == 1
     run_rounds(c, 1)
     flog2 = cat.read(spark, "fetch_log", schema.FETCH_LOG)
     assert flog2.where("status = 'fetched'").count() == 2  # re-fetched
@@ -197,8 +197,7 @@ def test_requeue_lack_round_policy_knob(spark, tmp_path):
     pages = spark.createDataFrame([(url, None, html, "t", "en")], schema.PAGES)
     cat = Catalog(tmp_path / "wh")
     c = CrawlContext(spark, cat, load_rules([rule]), pages, None,
-                     settings={"buckets": 4, "bloom_keys_per_bucket": 100,
-                               "requeue_lack": True})
+                     settings={"buckets": 4, "requeue_lack": True})
     run_rounds(c, 2)
     flog = cat.read(spark, "fetch_log", schema.FETCH_LOG)
     rows = sorted((r["round"], r["status"], r["reason"]) for r in flog.collect())
@@ -209,7 +208,7 @@ def test_requeue_lack_round_policy_knob(spark, tmp_path):
     # knob off: round 2 never re-fetches
     cat2 = Catalog(tmp_path / "wh2")
     c2 = CrawlContext(spark, cat2, load_rules([rule]), pages, None,
-                      settings={"buckets": 4, "bloom_keys_per_bucket": 100})
+                      settings={"buckets": 4})
     run_rounds(c2, 2)
     flog2 = cat2.read(spark, "fetch_log", schema.FETCH_LOG)
     assert flog2.count() == 1

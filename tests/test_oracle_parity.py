@@ -25,7 +25,6 @@ N_ROUNDS = 5
 SETTINGS = {
     "schedule_quantity_limitation": 60,  # tight: exercises quota carry + leftovers
     "buckets": 8,
-    "bloom_keys_per_bucket": 500,
     "default_host_budget": 25,  # tight: politeness leftovers across rounds
 }
 

@@ -2,6 +2,8 @@
 consume_quota pop semantics, per-host budget, bloom shard membership,
 snapshot catalog commit modes."""
 
+import hashlib
+
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
@@ -92,32 +94,36 @@ def test_per_host_budget_exact_topk(spark):
 
 
 # ------------------------------------------------------------- bloom
+def _md5_keys(start, n):
+    """(url_hash, bucket) rows shaped as the round's: md5 hex keys, bucket
+    from the first 3 hex digits as canon.bucket_of_hash at 4 buckets."""
+    hs = [hashlib.md5(f"http://k.test/{i}".encode()).hexdigest()
+          for i in range(start, start + n)]
+    return [(h, int(h[:3], 16) % 4) for h in hs]
+
+
 def test_bloom_update_and_probe(spark):
-    hashes = [("%032x" % (i * 2654435761 % (1 << 128)), i % 4) for i in range(200)]
-    df = spark.createDataFrame(hashes, "url_hash string, bucket int")
-    empty = spark.createDataFrame([], bloom.BLOOM_SCHEMA)
-    shards = bloom.update_shards(spark, empty, df, expected_keys_per_bucket=500).persist()
-    assert shards.count() == 4
+    df = spark.createDataFrame(_md5_keys(0, 200), "url_hash string, bucket int")
+    shards = bloom.build_shards(df).persist()
+    rows = shards.collect()
+    assert len(rows) == 4 and sum(r["n_items"] for r in rows) == 200
+    assert all(r["m"] == bloom.shard_size_bits(r["n_items"]) for r in rows)
 
     # no false negatives
     probed = bloom.probe(df, shards)
     assert probed.where(~F.col("maybe_seen")).count() == 0
 
     # unseen keys: mostly negative (FP rate small), never errors
-    other = spark.createDataFrame(
-        [("%032x" % ((i + 10_000) * 2654435761 % (1 << 128)), i % 4) for i in range(500)],
-        "url_hash string, bucket int",
-    )
+    other = spark.createDataFrame(_md5_keys(10_000, 500), "url_hash string, bucket int")
     fp = bloom.probe(other, shards).where("maybe_seen").count()
-    assert fp < 25  # ~1% expected at 12 bits/key
+    assert fp < 25  # ~0.3% expected at 12 bits/key
 
-    # incremental merge keeps old membership
+    # a bucket rebuilt from its old keys plus new ones keeps both sets positive
     more = spark.createDataFrame(
-        [("%032x" % ((i + 777) * 40503 % (1 << 128)), 1) for i in range(50)],
-        "url_hash string, bucket int",
+        [r for r in _md5_keys(777, 400) if r[1] == 1][:50], "url_hash string, bucket int"
     )
-    shards2 = bloom.update_shards(spark, shards, more, expected_keys_per_bucket=500)
-    merged = shards.where("bucket != 1").unionByName(shards2.where("bucket = 1"))
+    rebuilt = bloom.build_shards(df.where("bucket = 1").unionByName(more))
+    merged = shards.where("bucket != 1").unionByName(rebuilt)
     assert bloom.probe(df, merged).where(~F.col("maybe_seen")).count() == 0
     assert bloom.probe(more, merged).where(~F.col("maybe_seen")).count() == 0
 
